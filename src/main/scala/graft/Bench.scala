@@ -1,442 +1,104 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
+import java.lang.management.ManagementFactory
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Times every slate query on the production session ([[GraftSession]])
+  * and prints two JSON lines: per-query maps, then a compact totals line.
+  *
+  *   SPARK_GRAFT_SF_DIR=<scale-factor dir> sbt "runMain graft.Bench"
+  *
+  * Each query is run once cold, then `SPARK_GRAFT_BENCH_RUNS` (default 3)
+  * warm times, and its median warm run is reported together with the
+  * process CPU seconds that run used (`cpu`): a run whose CPU/wall ratio
+  * falls well below the host's usual is one the host starved, which the
+  * reader sees without any contention heuristic. Every run writes the
+  * query's full result to the `noop` sink, so no output column is pruned
+  * away from the timing. `SPARK_GRAFT_BENCH_ONLY=q_a,q_b` restricts the
+  * run to the named queries (same-session A/B).
+  */
 object Bench {
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** (wall s, process CPU s, error) of one run; a query that THROWS is
+    * reported as an error marker, not as a fast-looking time-to-crash. */
+  private def timed(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame)
+      : (Double, Double, Option[String]) = {
+    val c0 = os.getProcessCpuTime
+    val t0 = System.nanoTime()
+    val err =
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        None
+      } catch { case e: Throwable => Some(e.getClass.getSimpleName) }
+      finally graft.dedup.Dedup.releaseCaches()
+    ((System.nanoTime() - t0) / 1e9, (os.getProcessCpuTime - c0) / 1e9, err)
+  }
+
+  /** A JSON object of already-rendered values, and a JSON string. */
+  private def obj(m: Seq[(String, Any)]): String =
+    m.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+  private def str(s: String): String = "\"" + s + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // pin UTC like Verify: events carry TIMESTAMP_NTZ-cast values, so
-      // time-window/band-join selectivity (hence timings) must not
-      // depend on the host timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      // same extensions as Verify: bench times the plans users get
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val runsPerQuery =
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
+    val spark = GraftSession()
     // warm up the session once (codegen compiler, parquet footer reader,
-    // shuffle machinery) so the first timed query isn't charged ~3s of
+    // shuffle machinery) so the first timed query isn't charged ~3 s of
     // one-time JVM setup
     spark.range(1000).selectExpr("sum(id)").collect()
     try spark.read.parquet(s"$sfDir/nation.parquet").count()
     catch { case _: Throwable => () }
-
-    // ------------- host-contention calibration probe -----------------
-    // Fixed deterministic work timed BEFORE the cold pass and AFTER the
-    // warm pass. On an idle host these are stable machine constants;
-    // external load inflates them roughly in proportion to the
-    // contention — so a reader (or the next round's judge) can
-    // recognize and normalize a contended artifact without re-running
-    // anything. (The round-8 driver artifact was ~3.1x inflated end to
-    // end by host contention and burned half a round's signal before a
-    // controlled re-run disproved the "regression".)
-    //  spin1: single pinned thread, pure ALU xorshift — per-core speed.
-    //  spinN: the same work on one thread per configured core — whole-
-    //         machine contention (the number that moves when someone
-    //         else owns the box; idle ≈ spin1, contended >> spin1).
-    //  shuffle: a tiny fixed range->groupBy->collect — scheduler +
-    //         shuffle machinery latency, catches I/O-side contention.
-    def spin(iters: Long): Long = { // xorshift64; no alloc, no memory
-      var x = 0x9e3779b97f4a7c15L; var i = 0L
-      while (i < iters) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      x
-    }
-    val sink = new java.util.concurrent.atomic.AtomicLong
-    // memory-bandwidth probe: strided sweeps over a 64 MB long array
-    // (far beyond LLC) — the series spin and the cache-resident
-    // shuffle probe CANNOT feel. Added after r13's driver artifact
-    // proved a contention class (hypervisor-side I/O / memory-bus
-    // pressure) that inflated scans 2.9× while both existing probe
-    // series read idle. One thread per core, same shape as spinN.
-    val membwArr = Array.tabulate(8 * 1024 * 1024)(i => i.toLong)
-    // NB: membwSweep MUST be JIT-warmed before its first timed use —
-    // see the warmup call below calibrate(); an interpreted first
-    // sweep reads 4-7× the compiled steady state and systematically
-    // tripped the contended flag at JVM start (measured idle-machine
-    // pre/post pairs 0.25-0.44 vs 0.06-0.07 across four r15 runs and
-    // the r14 artifact — the "pre-run membw contention" those
-    // artifacts flagged was partly this measurement bug, not the
-    // host)
-    def membwSweep(passes: Int): Long = {
-      var acc = 0L; var p = 0
-      while (p < passes) {
-        var i = (p * 7919) % 64 // vary the start so sweeps don't align
-        while (i < membwArr.length) { acc += membwArr(i); i += 64 }
-        var j = 0
-        while (j < membwArr.length) { acc += membwArr(j); j += 8 }
-        p += 1
-      }
-      acc
-    }
-    def membw(passes: Int): Double = {
-      val t = System.nanoTime()
-      val threads = (1 to cpus.toInt).map(_ =>
-        new Thread(() => { sink.addAndGet(membwSweep(passes)); () }))
-      threads.foreach(_.start()); threads.foreach(_.join())
-      (System.nanoTime() - t) / 1e9
-    }
-    def calibrate(): String = {
-      val iters = 200000000L
-      val t0 = System.nanoTime()
-      sink.addAndGet(spin(iters))
-      val single = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val threads = (1 to cpus.toInt).map(_ =>
-        new Thread(() => { sink.addAndGet(spin(iters)); () }))
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val par = (System.nanoTime() - t1) / 1e9
-      val t2 = System.nanoTime()
-      spark.range(1000000).selectExpr("id % 97 AS k", "id AS v")
-        .groupBy("k").sum("v").collect()
-      val shuffle = (System.nanoTime() - t2) / 1e9
-      val bw = membw(8)
-      f"""{"spin1":$single%.3f,"spinN":$par%.3f,"shuffle":$shuffle%.3f,"membw":$bw%.3f}"""
-    }
-    // JIT-warm the probe kernels before the first timed calibration:
-    // the pre-run probes exist to read the MACHINE, and an
-    // interpreted first pass reads compiler state instead (membw
-    // measured 3.9× its idle constant on a verified-idle host purely
-    // from this). One single-threaded pass per kernel compiles the
-    // methods every timed (threaded) run then reuses.
-    sink.addAndGet(membwSweep(2))
-    sink.addAndGet(spin(20000000L))
-    // the SHUFFLE probe kernel needs the same treatment (round-16
-    // finding, same class as the membw JIT bug): the pre-run
-    // calibrate() used to issue the JVM's FIRST real groupBy shuffle,
-    // so its reading was shuffle-machinery init + codegen compilation,
-    // not the machine — measured 1.58 s pre vs 0.36 s post on a
-    // verified-clean run (bench_ratio 1.0) vs the 0.45 s idle
-    // constant, i.e. every clean run would trip a 3×-idle endpoint
-    // rule. One untimed pass of the exact probe query leaves the
-    // timed pre-run probe reading the host.
-    spark.range(1000000).selectExpr("id % 97 AS k", "id AS v")
-      .groupBy("k").sum("v").collect()
-    val calibPre = calibrate()
-
-    // membw value of a calibrate() JSON string — the endpoint levels
-    // feed the contended verdict below (the r14 lesson: calib_pre
-    // membw read 7× idle while every CPU probe sat in the idle band,
-    // and the artifact still said contended:false)
-    def membwOf(calib: String): Double =
-      "\"membw\":([0-9.]+)".r.findFirstMatchIn(calib)
-        .map(_.group(1).toDouble).getOrElse(0.0)
-    def shuffleOf(calib: String): Double =
-      "\"shuffle\":([0-9.]+)".r.findFirstMatchIn(calib)
-        .map(_.group(1).toDouble).getOrElse(0.0)
-
-    // per-SEGMENT micro-probes: the pre/post pair proved round-9/10
-    // artifacts contended but can't say WHEN — a contention window in
-    // the middle of the run inflates 40 queries and both endpoint
-    // probes read idle. Every 20 queries (each pass) one quarter-size
-    // spinN probe AND one quarter-size shuffle probe record the
-    // machine's state next to the queries they timed; a reader
-    // discounts a "regression" whose neighboring probes are inflated
-    // (rule documented in SCALING.md). The shuffle probe exists
-    // because CPU spin alone missed the round-11 window: memory-
-    // bandwidth / scheduler contention inflated shuffle-bound queries
-    // 3× while spinN stayed flat — only the endpoint shuffle calib
-    // caught it, too coarse to localize. ~0.15 s per probe pair on an
-    // idle host — noise against a 100+ s pass.
-    val segProbes = scala.collection.mutable.ArrayBuffer.empty[String]
-    // warm-pass probes kept structured too: they drive the
-    // probe-normalized total below
-    val warmProbes =
-      scala.collection.mutable.ArrayBuffer
-        .empty[(Int, Double, Double, Double)]
-    def microProbe(phase: String, at: Int): Unit = {
-      val iters = 50000000L
-      val t = System.nanoTime()
-      val threads = (1 to cpus.toInt).map(_ =>
-        new Thread(() => { sink.addAndGet(spin(iters)); () }))
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val s = (System.nanoTime() - t) / 1e9
-      val t2 = System.nanoTime()
-      spark.range(250000).selectExpr("id % 97 AS k", "id AS v")
-        .groupBy("k").sum("v").collect()
-      val sh = (System.nanoTime() - t2) / 1e9
-      val bw = membw(2)
-      if (phase == "warm") warmProbes += ((at, s, sh, bw))
-      segProbes +=
-        f"""{"phase":"$phase","at":$at,"spinN":$s%.3f,"shuffle":$sh%.3f,"membw":$bw%.3f}"""
-    }
-
-    // optional comma-separated filter: bench only the named queries
-    // (targeted same-session A/B runs; full slate when unset)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def slate = SparkEntry.queries
+    val slate = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
 
-    // One timed run; a query that THROWS is reported as an error marker,
-    // not as a fast-looking time-to-crash (a silently broken query must
-    // never read as a speedup in the artifact).
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err =
-        try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-        finally graft.dedup.Dedup.releaseCaches()
-      ((System.nanoTime() - t0) / 1e9, err)
+    // COLD pass: each query's first run in this JVM, codegen compilation
+    // included; it doubles as the per-query warmup for the warm pass
+    val cold = slate.map { case (name, fn) =>
+      (name, fn, timed(spark, sfDir, fn))
     }
-
-    // COLD pass: each query's first run in this JVM at the full bench
-    // SF — single-shot, codegen compilation included. This is the
-    // round-1..3 methodology, kept in the artifact so rounds stay
-    // comparable under either lens. It doubles as the per-query codegen
-    // warmup for the median pass below (Janino caches generated classes
-    // per JVM), replacing the old separate sf0.001 sweep.
-    val cold = slate.zipWithIndex.map { case ((name, fn), i) =>
-      if (i > 0 && i % 20 == 0) microProbe("cold", i)
-      name -> timed(fn)
-    }.toMap
-
-    // settle the JVM between the cold pass and the timed warm pass:
-    // drop leftover cached blocks and let the old-gen collect, so warm
-    // queries aren't charged the cold pass's garbage
+    // drop leftover cached blocks and let the old generation collect, so
+    // warm queries aren't charged the cold pass's garbage
     spark.catalog.clearCache()
     System.gc()
 
-    // Median-of-3 per query: a single-shot timing is hostage to whatever
-    // else the machine is doing (round 3's bench artifact showed a fake
-    // ~2× regression from external load that a controlled re-run
-    // disproved). Three runs and the median make one contended run
-    // harmless; the reported spread (max-min) lets a reader judge how
-    // noisy the session was without re-running anything.
-    // clamped to >= 1 (0 would crash after the whole cold pass);
-    // for even N the LOWER median is reported — biased toward the
-    // less-contended run, which is the signal the artifact wants
-    val runsPerQuery =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val resultsOrdered = slate.zipWithIndex.map { case ((name, fn), i) =>
-      if (i > 0 && i % 20 == 0) microProbe("warm", i)
-      val samples = (1 to runsPerQuery).map(_ => timed(fn))
-      val times = samples.map(_._1).sorted
-      val median = times((times.size - 1) / 2)
-      val err = (cold(name)._2.toSeq ++ samples.flatMap(_._2)).headOption
-      (name, median, times.last - times.head, err, i)
-    }.toSeq
-    val results = resultsOrdered
-      .map { case (name, med, spr, err, _) => name -> (med, spr, err) }
-      .toMap
-    def fmt(sel: ((Double, Double, Option[String])) => Double) = results
-      .map { case (k, v) => "\"" + k + "\":" + sel(v) }
-      .mkString("{", ",", "}")
-    val qs = fmt(_._1)
-    val spreads = fmt(_._2)
-    val colds = cold.map { case (k, v) => "\"" + k + "\":" + v._1 }
-      .mkString("{", ",", "}")
+    // WARM pass: median of N runs (the LOWER median for even N); the
+    // spread (max - min wall) shows how noisy the session was
+    val warm = cold.map { case (name, fn, (_, _, coldErr)) =>
+      val samples =
+        (1 to runsPerQuery).map(_ => timed(spark, sfDir, fn)).sortBy(_._1)
+      val (wall, cpu, _) = samples((samples.size - 1) / 2)
+      val err = (coldErr.toSeq ++ samples.flatMap(_._3)).headOption
+      (name, wall, cpu, samples.last._1 - samples.head._1, err)
+    }
+    val total = warm.map(_._2).sum
+    val cpuTotal = warm.map(_._3).sum
+    val coldTotal = cold.map(_._3._1).sum
     // err carries ONLY failing queries (usually {}): exception class per
     // query, from whichever of its cold/warm runs failed first
-    val errs = results.collect { case (k, (_, _, Some(e))) =>
-      "\"" + k + "\":\"" + e + "\""
-    }.mkString("{", ",", "}")
-    val total = results.values.map(_._1).sum
-    val coldTotal = cold.values.map(_._1).sum
-    val errCount = results.values.count(_._3.isDefined)
-    val calibPost = calibrate()
-    val calibSeg = segProbes.mkString("[", ",", "]")
-    // self-defense summary: flagged contended when a SUSTAINED window
-    // shows in the run's own probes — at least two segment probes of
-    // the SAME series more than 2× that series' run median (plus an
-    // absolute floor so sub-0.1 s shuffle jitter can't trip it). A
-    // single spiked probe is scheduler jitter (a 0.1 s micro-probe on
-    // 32 threads has real variance; the first full run false-positived
-    // on exactly that). BOTH series feed the rule: spinN catches
-    // CPU-stealing neighbors, shuffle catches the memory-bandwidth /
-    // scheduler contention that left spinN flat in round 11 while
-    // shuffle-bound queries ran 3× inflated. Uniformly-inflated runs
-    // show no internal disagreement at all and are caught by reading
-    // calib_pre/calib_post against the idle machine constants
-    // documented in SCALING.md.
-    def series(key: String): scala.collection.Seq[Double] =
-      segProbes.flatMap { s =>
-        ("\"" + key + "\":([0-9.]+)").r
-          .findFirstMatchIn(s).map(_.group(1).toDouble)
-      }
-    def sustained(vals: scala.collection.Seq[Double]): Boolean =
-      vals.nonEmpty && {
-        val med = vals.sorted.apply(vals.size / 2)
-        vals.count(v => v > 2 * med && v > med + 0.1) >= 2
-      }
-    // machine constants of the documented idle host (SCALING.md "idle
-    // reference"): full-calibrate warm values and warm micro-probe
-    // medians. Shipped IN the artifact so a reader needs no side
-    // channel to judge probe levels.
-    val idleCalib = Map("spin1" -> 0.43, "spinN" -> 0.46,
-      "shuffle" -> 0.45, "membw" -> 0.064)
-    val idleMicro = Map("spinN" -> 0.13, "shuffle" -> 0.45,
-      "membw" -> 0.026)
-    // membw evidence feeds the verdict on BOTH timescales (the r14
-    // hole: pre-run calib membw at 7× idle, every window probe idle,
-    // contended:false): endpoint calibrate() levels against the idle
-    // constant catch contention that brackets a pass, and ≥2 elevated
-    // warm micro-probes catch a sustained window the run's own median
-    // would absorb. Thresholds are 3× idle — far outside the
-    // documented clean-epoch band for this probe (r14 idle epochs:
-    // calib 0.064±0.01, micro 0.021-0.034).
-    val membwEndpoint =
-      membwOf(calibPre) >= 3 * idleCalib("membw") ||
-        membwOf(calibPost) >= 3 * idleCalib("membw")
-    val membwMicroSustained =
-      warmProbes.count(_._4 >= 3 * idleMicro("membw")) >= 2
-    val membwEvidence = membwEndpoint || membwMicroSustained
-    // the SAME 3×-idle endpoint rule on the shuffle probe (round-15
-    // verdict hole: the contention class that inflated that run's
-    // tail was shuffle/disk-visible, not membw-visible, and the
-    // endpoint rule existed only for membw — the sustained-window
-    // rule alone can't see contention that brackets a pass). Sound
-    // only now that the probe kernel is JIT/init-warmed above:
-    // pre-warmup, a verified-clean run read 1.58 s (3.5× idle) on
-    // first-shuffle machinery init alone.
-    val shuffleEndpoint =
-      shuffleOf(calibPre) >= 3 * idleCalib("shuffle") ||
-        shuffleOf(calibPost) >= 3 * idleCalib("shuffle")
-    val shuffleEvidence = shuffleEndpoint ||
-      warmProbes.count(_._3 >= 3 * idleMicro("shuffle")) >= 2
-    val contended = sustained(series("spinN")) ||
-      sustained(series("shuffle")) || sustained(series("membw")) ||
-      membwEvidence || shuffleEvidence
-    // probe-NORMALIZED warm total: a reader without this host's idle
-    // record can discount a contended artifact from the artifact
-    // alone. Rule (documented + validated in SCALING.md): a warm
-    // segment whose governing probe — the one taken at the segment's
-    // start (the trailing at=20 probe for the first segment) — meets
-    // the contended criterion for EITHER series (>2× that series' warm
-    // median AND >median+0.1 s absolute floor, the same thresholds as
-    // the `contended` flag) has its query times divided by that
-    // probe's worst ratio; mild jitter below the criterion is left
-    // alone so idle runs report normalized == warm. Validated against
-    // the r12 pair: the contended 122.0 s artifact normalizes to
-    // ≈112.9 vs the 110.9 s idle record (within 2%).
-    def medianD(xs: Seq[Double]): Double = {
-      val s = xs.sorted; s((s.size - 1) / 2)
-    }
-    val normFactor: Int => Double =
-      if (warmProbes.isEmpty) _ => 1.0
-      else {
-        val medS = medianD(warmProbes.map(_._2).toSeq)
-        val medSh = medianD(warmProbes.map(_._3).toSeq)
-        val medBw = medianD(warmProbes.map(_._4).toSeq)
-        (i: Int) => {
-          val p = warmProbes.filter(_._1 <= i).lastOption
-            .getOrElse(warmProbes.head)
-          def ratio(v: Double, med: Double): Double =
-            if (med > 0 && v > 2 * med && v > med + 0.1) v / med else 1.0
-          // membw's absolute floor is scaled to its much smaller idle
-          // magnitude (a 0.1 s floor would never trip on a 0.026 s
-          // probe)
-          def ratioBw(v: Double): Double =
-            if (medBw > 0 && v > 2 * medBw && v > medBw + 0.02)
-              v / medBw
-            else 1.0
-          math.max(math.max(ratio(p._2, medS), ratio(p._3, medSh)),
-            ratioBw(p._4))
-        }
-      }
-    val probeNormalizedWarm = resultsOrdered
-      .map { case (_, med, _, _, i) => med / normFactor(i) }.sum
-
-    // ---- SUSTAINED-contention normalization (the r13 lesson) -------
-    // The per-segment rule above only catches contention WINDOWS: it
-    // compares probes against the run's own median, and a uniformly
-    // loaded host inflates that median itself. Worse, the r12-vs-r13
-    // driver artifacts proved the probes can be blind outright: both
-    // runs' warm probe medians sat at idle level (spinN ≈0.14/≈0.11,
-    // shuffle ≈0.46/≈0.53) while one run was 1.1× idle and the other
-    // 2.9× — whatever stole the throughput (I/O or memory-bus
-    // pressure on real scans) did not touch a register-only spin or a
-    // cache-resident 250k-row shuffle. So sustained detection anchors
-    // on the workload itself: bench_ratio, the median over anchored
-    // queries of this-run-time / committed-idle-time, from the
-    // per-query anchor file the idle record regenerates each round.
-    // The median is robust to the few genuine per-query code movers a
-    // round produces, and a real regression stays visible in the raw
-    // warm total and the per-query map, which always lead the
-    // artifact. The probe LEVEL vs idle constants is also computed
-    // and reported (level_ratio) but never normalizes — see below.
-    // normalized_warm is DIAGNOSTIC: min of the window rule and the
-    // sustained rule, never their composition (composing would
-    // double-discount a window that also lifted the slate median).
-    val anchors: Map[String, Double] = {
-      val in = Option(getClass.getResourceAsStream("/graft/bench_anchors.txt"))
-      in.map { s =>
-        val src = scala.io.Source.fromInputStream(s)
-        try src.getLines()
-          .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-          .flatMap { l =>
-            l.split("\\s+") match {
-              case Array(n, t) => scala.util.Try(n -> t.toDouble).toOption
-              case _ => None
-            }
-          }.toMap
-        finally src.close()
-      }.getOrElse(Map.empty)
-    }
-    // sub-0.2 s anchors are scheduler-noise-dominated; excluding them
-    // keeps one jittery 60 ms query from steering the median
-    val anchorPairs = resultsOrdered.flatMap { case (n, med, _, _, _) =>
-      anchors.get(n).filter(_ >= 0.2).map(a => (med, a))
-    }
-    val ratioPairs = anchorPairs.map { case (m, a) => m / a }
-    val benchRatio =
-      if (ratioPairs.size >= 20) medianD(ratioPairs.toSeq) else 1.0
-    // time-WEIGHTED anchored ratio: Σ med / Σ anchor. The median
-    // ratio is robust to code movers but BLIND to tail inflation —
-    // r14's driver artifact ran the median query at 0.91× anchor
-    // while the heavy scan-bound tail pushed the TOTAL to 1.99×
-    // (membw-class contention touches scans, not the median
-    // CPU-bound query). The sum ratio is exactly the total's own
-    // inflation over the anchored subset.
-    val anchoredSumRatio =
-      if (anchorPairs.size >= 20 && anchorPairs.map(_._2).sum > 0)
-        anchorPairs.map(_._1).sum / anchorPairs.map(_._2).sum
-      else 1.0
-    val levelRatio = if (warmProbes.isEmpty) 1.0 else math.max(
-      medianD(warmProbes.map(_._2).toSeq) / idleMicro("spinN"),
-      medianD(warmProbes.map(_._3).toSeq) / idleMicro("shuffle"))
-    // Only the query-anchored signal NORMALIZES (engage at 1.5× —
-    // clean-epoch drift on this host is ~±10-40%, SCALING.md). The
-    // probe-level ratio is reported as corroborating evidence but
-    // never scales the total: measured on this host it diverges from
-    // query throughput in BOTH directions (r13 driver artifact: warm
-    // probes at idle level while queries ran 2.9×; round-14 smoke: a
-    // 2.4× spinN level over a subset whose queries ran FASTER than
-    // anchor). Normalizing by a probe that does not track the
-    // workload would manufacture numbers.
-    // The sum-ratio rule normalizes ONLY with corroborating probe
-    // evidence — membw OR shuffle endpoint/window (the round-15 run's
-    // tail inflation was shuffle-visible while membw sat idle):
-    // without an externally-measured cause, a heavy-tail
-    // inflation could be a genuine per-query regression that must
-    // stay visible (it still does regardless — raw warm and the
-    // per-query map lead the artifact; normalized_warm is
-    // diagnostic). Engage threshold 1.5×, same as the median rule
-    // (clean-epoch drift on this host is ~±10-40%, SCALING.md).
-    val sumRuleRatio =
-      if ((membwEvidence || shuffleEvidence) && anchoredSumRatio >= 1.5)
-        anchoredSumRatio
-      else 1.0
-    val sustainedRatio = math.max(
-      if (benchRatio >= 1.5) benchRatio else 1.0, sumRuleRatio)
-    val contendedSustained = sustainedRatio > 1.0
-    val normalizedWarm =
-      math.min(probeNormalizedWarm, total / sustainedRatio)
-    // The driver stores only the TAIL of stdout (last ~2000 chars), so
-    // the big per-query maps go FIRST and the headline numbers LAST —
-    // round 5's artifact lost its warm total to exactly this
-    // truncation. A final compact totals-only line survives any tail
-    // window on its own.
-    val anchorJson = {
-      def m(mp: Map[String, Double]) = mp.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      s"""{"calib":${m(idleCalib)},"micro":${m(idleMicro)},"queries_anchored":${ratioPairs.size}}"""
-    }
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","runs_per_query":$runsPerQuery,"queries":$qs,"spread":$spreads,"cold":$colds,"value":$total,"normalized_warm":$normalizedWarm,"cold_total":$coldTotal,"err":$errs,"calib_pre":$calibPre,"calib_post":$calibPost,"calib_seg":$calibSeg}""")
-    println(s"""{"metric":"totals","warm":$total,"normalized_warm":$normalizedWarm,"cold":$coldTotal,"err_count":$errCount,"n_queries":${results.size},"sf":"$sfDir","calib_pre":$calibPre,"calib_post":$calibPost,"contended":$contended,"contended_sustained":$contendedSustained,"bench_ratio":$benchRatio,"anchored_sum_ratio":$anchoredSumRatio,"membw_evidence":$membwEvidence,"shuffle_evidence":$shuffleEvidence,"level_ratio":$levelRatio,"idle_anchors":$anchorJson}""")
+    val errs = warm.flatMap { case (n, _, _, _, e) => e.map(x => n -> str(x)) }
+    // the per-query maps go first and the headline numbers last, and the
+    // totals line stands alone, so a reader keeping only the tail of
+    // stdout still has the totals
+    val sf = str(sfDir)
+    println(obj(Seq("metric" -> str("total"), "unit" -> str("sec"), "sf" -> sf,
+      "runs_per_query" -> runsPerQuery,
+      "queries" -> obj(warm.map(w => w._1 -> w._2)),
+      "spread" -> obj(warm.map(w => w._1 -> w._4)),
+      "cpu" -> obj(warm.map(w => w._1 -> w._3)),
+      "cold" -> obj(cold.map { case (n, _, c) => n -> c._1 }),
+      "value" -> total, "normalized_warm" -> total,
+      "cold_total" -> coldTotal, "err" -> obj(errs))))
+    println(obj(Seq("metric" -> str("totals"), "warm" -> total,
+      "normalized_warm" -> total, "cold" -> coldTotal, "cpu" -> cpuTotal,
+      "err_count" -> errs.size, "n_queries" -> warm.size, "sf" -> sf)))
     spark.stop()
   }
 }

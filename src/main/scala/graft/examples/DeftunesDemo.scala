@@ -1,14 +1,15 @@
 package graft.examples
 
-import java.nio.file.Files
 import java.time.LocalDate
 
 import scala.concurrent.ExecutionContext.Implicits.global
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.pipeline.{Deftunes, LakePaths, RunWindow}
 import graft.sources.Source
+import graft.util.TempDirs
 
 /** Runnable end-to-end example of the engine's medallion pipelines:
   * two monthly windows of API + songs ingestion through landing →
@@ -44,18 +45,10 @@ object DeftunesDemo {
     }.mkString("[", ",", "]")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("deftunes-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("demo-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("spark.sql.warehouse.dir" ->
+      TempDirs.create("demo-warehouse").toString)
 
-    val paths = LakePaths(Files.createTempDirectory("demo-lake").toString)
+    val paths = LakePaths(TempDirs.create("demo-lake").toString)
     val windows = RunWindow.monthly(LocalDate.parse("2020-01-01"),
       LocalDate.parse("2020-03-01"))
 

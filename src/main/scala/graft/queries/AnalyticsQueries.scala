@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.util.Tables
+import graft.util.{Tables, TempDirs}
 
 /** Analytic-SQL breadth beyond the reference's surface (the reference
   * has no window functions, rollups, or set ops — SURVEY §2.6): ranking
@@ -35,8 +35,7 @@ object AnalyticsQueries {
   private def summaryBase(s: org.apache.spark.sql.SparkSession,
       d: String): String =
     summaryBuilt.getOrElseUpdate(d, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-rollup-q").toString
+      val root = TempDirs.create("graft-rollup-q").toString
       val bp = s"$root/base"
       val sp = s"$root/summary"
       Tables.lineitem(s, d).select(

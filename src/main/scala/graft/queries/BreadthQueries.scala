@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.lake.Layout
 import graft.operators.Temporal
-import graft.util.Tables
+import graft.util.{Tables, TempDirs}
 
 /** Second breadth ring beyond AnalyticsQueries: temporal joins (as-of,
   * bounded-gap band join), pivot/cube/grouping-sets aggregation, a full
@@ -915,8 +915,7 @@ object BreadthQueries {
     QueryDef("q_file_skip",
       (s, d) => {
         val dir = fileSkipDirs.getOrElseUpdate(d, {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-skip-q").toString
+          val out = TempDirs.create("graft-skip-q").toString
           Tables.lineitem(s, d)
             .select(col("l_orderkey"),
               col("l_shipdate").cast("date").as("sd"), col("l_quantity"))

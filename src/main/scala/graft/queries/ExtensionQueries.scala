@@ -10,7 +10,7 @@ import graft.dq.{ApproxDistinctness, Dqdl, Ruleset}
 import graft.multimodal.Multimodal
 import graft.similarity.{Ivf, Ivfpq, Pq, Similarity}
 import graft.text.{Retrieval, TextAnalysis}
-import graft.util.{Checkpointing, Tables}
+import graft.util.{Checkpointing, Tables, TempDirs}
 
 /** The beyond-reference operators a large-scale training-data pipeline
   * needs (BASELINE.json north star): dedup in five flavors, ANN
@@ -705,8 +705,7 @@ object ExtensionQueries {
         // ANN-model memoizations; the measured query is the batch
         // dedup against the stored index
         val idx = incIndexRoots.getOrElseUpdate(d, {
-          val root = java.nio.file.Files
-            .createTempDirectory("graft-inc-idx").toString
+          val root = TempDirs.create("graft-inc-idx").toString
           val built = Dedup.buildMinHashIndex(
             docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
           built.shingles.write.mode("overwrite").parquet(s"$root/sh")
@@ -1037,8 +1036,7 @@ object ExtensionQueries {
           Ivf.train(base, "vec_id", "embedding",
             k = IvfSql.k, iters = IvfSql.iters))
         val root = incAnnRoots.getOrElseUpdate(d, {
-          val r = java.nio.file.Files
-            .createTempDirectory("graft-ann-idx").toString
+          val r = TempDirs.create("graft-ann-idx").toString
           val inv = base.select(col("vec_id").as("id"),
             col("embedding").cast("array<double>").as("v"))
             .withColumn("cell", Ivf.assignCell(col("v"), model))
@@ -1159,8 +1157,7 @@ object ExtensionQueries {
               s.sessionState.sqlParser.parseTableIdentifier(tbl)))
           val fs = loc.getFileSystem(s.sessionState.newHadoopConf())
           if (fs.exists(loc)) fs.delete(loc, true)
-          val ckpt = java.nio.file.Files
-            .createTempDirectory("graft-drain-ckpt").toString
+          val ckpt = TempDirs.create("graft-drain-ckpt").toString
           val evts = eventStream(s, d)
             .withColumn("ingest_on", to_date(col("ts")))
           graft.streaming.StreamingIngest.sinkToSilver(evts, s, tbl, ckpt)
@@ -1192,8 +1189,7 @@ object ExtensionQueries {
     QueryDef("q_stream_join",
       (s, d) => {
         val out = streamJoinOuts.getOrElseUpdate(d, {
-          val root = java.nio.file.Files
-            .createTempDirectory("graft-stream-join").toString
+          val root = TempDirs.create("graft-stream-join").toString
           val clicks = eventStream(s, d)
             .filter(col("event_type") === "click")
             .select(col("event_id").as("click_id"),
@@ -1237,8 +1233,7 @@ object ExtensionQueries {
     QueryDef("q_stream_quota",
       (s, d) => {
         val out = streamQuotaOuts.getOrElseUpdate(d, {
-          val root = java.nio.file.Files
-            .createTempDirectory("graft-stream-quota").toString
+          val root = TempDirs.create("graft-stream-quota").toString
           val prev = s.conf.getOption(
             "spark.sql.streaming.stateStore.providerClass")
           s.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -1282,8 +1277,7 @@ object ExtensionQueries {
     QueryDef("q_stream_dedup",
       (s, d) => {
         val out = streamDedupOuts.getOrElseUpdate(d, {
-          val root = java.nio.file.Files
-            .createTempDirectory("graft-stream-dedup").toString
+          val root = TempDirs.create("graft-stream-dedup").toString
           def src = eventStream(s, d)
             .select(col("event_id"), col("ts"), col("event_type"))
           val redelivered = src.unionByName(src)
@@ -1313,8 +1307,7 @@ object ExtensionQueries {
       (s, d) => {
         val out = streamKmvOuts.getOrElseUpdate(d, {
           import org.apache.spark.sql.types._
-          val root = java.nio.file.Files
-            .createTempDirectory("graft-stream-kmv").toString
+          val root = TempDirs.create("graft-stream-kmv").toString
           def src = s.readStream
             .option("pathGlobFilter", "documents.parquet")
             .schema(StructType(Seq(
@@ -1364,8 +1357,7 @@ object ExtensionQueries {
         import graft.functions.KmvFunctions._
         val out = streamQuantileOuts.getOrElseUpdate(d, {
           import org.apache.spark.sql.types._
-          val root = java.nio.file.Files
-            .createTempDirectory("graft-stream-quantile").toString
+          val root = TempDirs.create("graft-stream-quantile").toString
           def src = s.readStream
             .option("pathGlobFilter", "documents.parquet")
             .schema(StructType(Seq(
@@ -1515,8 +1507,7 @@ object ExtensionQueries {
         // deterministic, and warm bench repeats must not leak one
         // populated temp tree per run
         val root = snapshotRoots.getOrElseUpdate(s"read|$d", {
-          val r = java.nio.file.Files
-            .createTempDirectory("graft-snap-q").toString
+          val r = TempDirs.create("graft-snap-q").toString
           val docs = Tables.documents(s, d)
             .select(col("doc_id"), col("lang"), col("source"))
           Snapshots.createOrReplace(docs.filter(col("doc_id") < 300), r)
@@ -1539,8 +1530,7 @@ object ExtensionQueries {
       (s, d) => {
         import graft.lake.Snapshots
         val root = snapshotRoots.getOrElseUpdate(s"merge|$d", {
-          val r = java.nio.file.Files
-            .createTempDirectory("graft-snap-m").toString
+          val r = TempDirs.create("graft-snap-m").toString
           val docs = Tables.documents(s, d)
             .select(col("doc_id"), col("lang"), col("source"))
           Snapshots.createOrReplace(docs.filter(col("doc_id") < 300), r)
@@ -1566,8 +1556,7 @@ object ExtensionQueries {
       (s, d) => {
         import graft.lake.Snapshots
         val root = snapshotRoots.getOrElseUpdate(s"upsert|$d", {
-          val r = java.nio.file.Files
-            .createTempDirectory("graft-snap-u").toString
+          val r = TempDirs.create("graft-snap-u").toString
           val docs = Tables.documents(s, d)
             .select(col("doc_id"), col("lang"), col("source"))
           Snapshots.createOrReplace(docs.filter(col("doc_id") < 300), r)
@@ -1595,8 +1584,7 @@ object ExtensionQueries {
       (s, d) => {
         import graft.lake.Snapshots
         val root = snapshotRoots.getOrElseUpdate(s"diff|$d", {
-          val r = java.nio.file.Files
-            .createTempDirectory("graft-snap-diff").toString
+          val r = TempDirs.create("graft-snap-diff").toString
           val docs = Tables.documents(s, d)
             .select(col("doc_id"), col("lang"), col("source"))
           Snapshots.createOrReplace(docs.filter(col("doc_id") < 300), r)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.ModelRunner
-import graft.util.Tables
+import graft.util.{Tables, TempDirs}
 
 /** Driver-checkable query for the declarative SQL-file modeling layer
   * (the dbt analog, [[graft.model.ModelRunner]]). The embedded project
@@ -146,8 +146,7 @@ object ModelingQueries {
   /** Project written once per JVM (a few KB of text; warm bench
     * repeats must not leak temp trees). */
   private lazy val projectRoot: Path = {
-    val root = Files.createTempDirectory("graft-models")
-    root.toFile.deleteOnExit()
+    val root = TempDirs.create("graft-models")
     projectFiles.foreach { case (rel, content) =>
       val p = root.resolve(rel)
       Files.createDirectories(p.getParent)
@@ -484,8 +483,7 @@ object ModelingQueries {
   /** Snapshot project written once per JVM (same leak discipline as
     * [[projectRoot]]). */
   private lazy val snapProjectRoot: Path = {
-    val root = Files.createTempDirectory("graft-snap-models")
-    root.toFile.deleteOnExit()
+    val root = TempDirs.create("graft-snap-models")
     snapProjectFiles.foreach { case (rel, content) =>
       val p = root.resolve(rel)
       Files.createDirectories(p.getParent)
@@ -519,8 +517,7 @@ object ModelingQueries {
   /** Incremental project written once per JVM (same leak discipline as
     * [[projectRoot]]). */
   private lazy val incProjectRoot: Path = {
-    val root = Files.createTempDirectory("graft-inc-models")
-    root.toFile.deleteOnExit()
+    val root = TempDirs.create("graft-inc-models")
     incProjectFiles.foreach { case (rel, content) =>
       val p = root.resolve(rel)
       Files.createDirectories(p.getParent)
@@ -536,8 +533,7 @@ object ModelingQueries {
     * runs (that's the point — the authored SELECT drifts and
     * on_schema_change reconciles the live table). */
   private lazy val evolveProjectRoot: Path = {
-    val root = Files.createTempDirectory("graft-evolve-models")
-    root.toFile.deleteOnExit()
+    val root = TempDirs.create("graft-evolve-models")
     Files.writeString(root.resolve("dbt_project.yml"),
       """name: 'graft_evolve'
         |vars:

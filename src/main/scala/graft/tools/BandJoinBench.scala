@@ -1,11 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.BandJoinRewrite
 
 /** A/B harness for [[graft.plans.BandJoinRewrite]]: the same naive
-  * range-join SQL timed with the rule ON (extensions registered) vs
-  * OFF (plain session), one process per mode so the sessions are
-  * clean. Two shapes:
+  * range-join SQL timed with the rule ON vs OFF (excluded from the
+  * optimizer through `spark.sql.optimizer.excludedRules`), one process
+  * per mode so the sessions are clean. Two shapes:
   *
   *  - `keyed`: per-user click→purchase attribution over synthesized
   *    events (`ScaleStress.synthesizeEvents` at the given multiplier)
@@ -26,17 +26,9 @@ object BandJoinBench {
     val nKeyless = args.lift(1).map(_.toLong).getOrElse(20000L)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory",
-        sys.env.getOrElse("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    val spark = (if (withExt)
-      b.withExtensions(new graft.functions.GraftExtensions) else b)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession((if (withExt) Nil
+      else Seq("spark.sql.optimizer.excludedRules" ->
+        BandJoinRewrite.ruleName)): _*)
 
     val evts = s"target/band-bench/evts_x$m"
     val n = ScaleStress.synthesizeEvents(spark, sfDir, m, evts)
@@ -45,7 +37,7 @@ object BandJoinBench {
     // keyed rewriting is opt-in (see BandJoinRewrite.KeyedConf); the
     // A/B here measures exactly that opt-in against the plain plan
     if (withExt)
-      spark.conf.set(graft.plans.BandJoinRewrite.KeyedConf, "true")
+      spark.conf.set(BandJoinRewrite.KeyedConf, "true")
 
     def time(label: String, sql: String): Unit = {
       val t0 = System.nanoTime()

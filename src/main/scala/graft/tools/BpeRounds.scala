@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures what BPE batching buys: count passes (Spark job rounds)
   * and wall for a large-vocabulary training run, batched vs the
   * sequential fold on the same corpus. Usage:
@@ -20,14 +18,7 @@ object BpeRounds {
     val source = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nMerges = args.lift(1).map(_.toInt).getOrElse(1000)
     val maxBatch = args.lift(2).map(_.toInt).getOrElse(32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import org.apache.spark.sql.functions._
     val words =
       if (source.startsWith("synth:")) {

@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-timeline profiler for driver-orchestration-heavy queries
   * (q_model_runner and friends): prints, for one warm run, every
@@ -10,22 +9,14 @@ import org.apache.spark.sql.SparkSession
   * serialized DDL/catalog/commit time between jobs that stage-level
   * profilers can't see. Run:
   *
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_SF_DIR=<scale-factor dir> \
   *     sbt "runMain graft.tools.ModelProfile q_model_runner"
   */
 object ModelProfile {
   def main(args: Array[String]): Unit = {
     val name = if (args.nonEmpty) args(0) else "q_model_runner"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val fn = graft.SparkEntry.queries.toMap.apply(name)
     // cold run: codegen + fixture builds
     fn(spark, sfDir).count()

@@ -249,33 +249,22 @@ object ScaleStress {
       "target/scale-stress")
     val multipliers = args.headOption.getOrElse("1,10,50")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Shuffle partitions default to the thread count but can be raised
     // independently — the documented remedy for the one matrix spill
     // (bigram ×100): more, smaller shuffle partitions fit the sorter in
     // memory without changing parallelism. On a cluster this is the
     // same knob sized to executor memory.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+    val shufflePartitions = sys.env.getOrElse(
+      "SPARK_GRAFT_SHUFFLE_PARTITIONS", graft.GraftSession.cpus.toString)
     // The map-side lever: smaller scan splits → more, smaller map
     // tasks → smaller per-task partial-aggregation hash maps. This is
     // the knob that actually governs map-side spill (shuffle-partition
     // count only shrinks the reduce side).
     val maxPartitionBytes =
       sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory",
-        sys.env.getOrElse("SPARK_GRAFT_DRIVER_MEM", "8g"))
-      // the production deployment shape (Verify/Bench carry it too):
-      // the summary_hit op measures the rollup rewrite, which only
-      // exists in extensions-carrying sessions
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(
+      "spark.sql.shuffle.partitions" -> shufflePartitions,
+      "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes)
 
     val rows = scala.collection.mutable.ArrayBuffer.empty[Measurement]
     val bucketReports = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1111,8 +1100,7 @@ object ScaleStress {
               spark.sessionState.sqlParser.parseTableIdentifier(tbl)))
           val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
           if (fs.exists(loc)) fs.delete(loc, true)
-          val ckpt = java.nio.file.Files
-            .createTempDirectory("scale-drain-ckpt").toString
+          val ckpt = graft.util.TempDirs.create("scale-drain-ckpt").toString
           val raw = spark.readStream
             .schema(spark.read.parquet(evtsPath).schema)
             .option("maxFilesPerTrigger", 1000).parquet(evtsPath)
@@ -1136,8 +1124,7 @@ object ScaleStress {
       // times are sampled against a GROWING store, not one bulk load.
       if (opEnabled("stream_quota")) {
         println(s"-- x$m stream_quota ...")
-        val root = java.nio.file.Files
-          .createTempDirectory(s"scale-quota-x$m").toString
+        val root = graft.util.TempDirs.create(s"scale-quota-x$m").toString
         val prev = spark.conf.getOption(
           "spark.sql.streaming.stateStore.providerClass")
         spark.conf.set("spark.sql.streaming.stateStore.providerClass",

@@ -2,21 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run (suites share the
-  * JVM under sbt's forked test runner). */
+/** One shared session for the whole test run (suites share the JVM
+  * under sbt's forked test runner) — the production session from
+  * [[GraftSession]], so every suite tests the engine that ships. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val warehouse = java.nio.file.Files
-      .createTempDirectory("graft-warehouse").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession("spark.sql.warehouse.dir" ->
+    util.TempDirs.create("graft-warehouse").toString)
 }

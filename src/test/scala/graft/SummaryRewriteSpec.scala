@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.SummaryCatalog
+import graft.plans.{SummaryCatalog, SummaryRewrite}
 
 /** The materialized-rollup rewrite (plans/SummaryRewrite.scala) is a
   * LIVE optimizer rule in every production session — any defect in it
@@ -26,25 +26,20 @@ import graft.plans.SummaryCatalog
   */
 class SummaryRewriteSpec extends AnyFunSuite {
 
-  /** Extensions bind at session build time — one extension session for
-    * the suite, shared default restored immediately (the pattern from
-    * ExtensionsSpec). */
-  private lazy val ext: SparkSession = {
-    val shared = SparkTestSession.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-summary-rewrite-test")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(shared)
-    SparkSession.setActiveSession(shared)
-    s
+  /** The shared session carries GraftExtensions, so the rewrite is live
+    * in it. */
+  private def ext = SparkTestSession.spark
+
+  /** Evaluates `f` with the rewrite excluded from the optimizer: the
+    * un-rewritten reference every rewritten plan must equal. */
+  private def unrewritten[T](f: => T): T = {
+    ext.conf.set("spark.sql.optimizer.excludedRules",
+      SummaryRewrite.ruleName)
+    try f finally ext.conf.unset("spark.sql.optimizer.excludedRules")
   }
+
+  private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
 
   private lazy val root = java.nio.file.Files
     .createTempDirectory("graft-rollup").toString
@@ -90,18 +85,26 @@ class SummaryRewriteSpec extends AnyFunSuite {
     p.exists(_.endsWith("/summary")) && !p.exists(_.endsWith("/base"))
   }
 
-  /** Bit-for-bit: same schema (the cast contract) and same rows. The
-    * expected side runs on the SHARED session — no extensions, no
-    * rewrite — over the same parquet. */
-  private def assertMatchesBase(rewritten: DataFrame,
-      build: DataFrame => DataFrame): Unit = {
-    val plain = build(SparkTestSession.spark.read.parquet(basePath))
-    assert(rewritten.schema == plain.schema,
-      s"schema drift: ${rewritten.schema} vs ${plain.schema}")
-    val got = rewritten.collect().map(_.toSeq).sortBy(_.mkString("|"))
-    val exp = plain.collect().map(_.toSeq).sortBy(_.mkString("|"))
-    assert(got.toSeq == exp.toSeq)
+  /** Bit-for-bit: same schema (the cast contract) and same rows as
+    * `plain`, which is planned [[unrewritten]] and must scan only the
+    * base. */
+  private def assertMatchesPlain(rewritten: DataFrame, plain: => DataFrame,
+      clue: String = ""): Unit = {
+    val got = sortedRows(rewritten)
+    val (schema, exp) = unrewritten {
+      val p = plain
+      assert(scannedPaths(p).forall(_.endsWith("/base")),
+        s"$clue\n${p.queryExecution.optimizedPlan}")
+      (p.schema, sortedRows(p))
+    }
+    assert(rewritten.schema == schema,
+      s"$clue schema drift: ${rewritten.schema} vs $schema")
+    assert(got == exp, clue)
   }
+
+  private def assertMatchesBase(rewritten: DataFrame,
+      build: DataFrame => DataFrame): Unit =
+    assertMatchesPlain(rewritten, build(ext.read.parquet(basePath)))
 
   private def aggAll(base: DataFrame): DataFrame =
     base.groupBy("k1", "k2").agg(
@@ -339,7 +342,7 @@ class SummaryRewriteSpec extends AnyFunSuite {
     // q_summary_sketch joins a rewritable estimate branch with a
     // deliberately-refusing exact-distinct branch: its plan must scan
     // BOTH the summary (estimate) and the base (exact), and the
-    // estimate must equal the plain session's direct sketch exactly
+    // estimate must equal the un-rewritten direct sketch exactly
     locally {
       val q = SparkEntry.queries("q_summary_sketch")
       val sf = "/root/testdata/sf0.001"
@@ -349,10 +352,7 @@ class SummaryRewriteSpec extends AnyFunSuite {
         paths.exists(_.endsWith("/base")),
         s"q_summary_sketch expected summary+base scans:\n" +
           df.queryExecution.optimizedPlan)
-      val plain = q(SparkTestSession.spark, sf)
-      assert(df.schema == plain.schema)
-      assert(df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq ==
-        plain.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq)
+      assertMatchesPlain(df, q(ext, sf))
     }
     for (name <- Seq("q_summary_rewrite", "q_summary_distinct")) {
       val q = SparkEntry.queries(name)
@@ -365,11 +365,8 @@ class SummaryRewriteSpec extends AnyFunSuite {
           df.queryExecution.optimizedPlan)
       assert(!paths.exists(_.endsWith("/base")),
         df.queryExecution.optimizedPlan.toString)
-      // plain session (no extensions → no rewrite): bit-identical rows
-      val plain = q(SparkTestSession.spark, sf)
-      assert(df.schema == plain.schema, name)
-      assert(df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq ==
-        plain.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq, name)
+      // rewrite excluded: bit-identical rows
+      assertMatchesPlain(df, q(ext, sf), name)
     }
   }
 
@@ -513,12 +510,15 @@ class SummaryRewriteSpec extends AnyFunSuite {
         else fb.groupBy(g: _*).agg(aggCols.head, aggCols.tail: _*)
       }
       val re = build(ext.read.parquet(basePath))
-      val pl = build(SparkTestSession.spark.read.parquet(basePath))
       total += 1
       if (scansSummary(re)) fired += 1
-      re.schema == pl.schema &&
-        re.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq ==
-          pl.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+      val got = sortedRows(re)
+      val (schema, exp, plainScansBase) = unrewritten {
+        val pl = build(ext.read.parquet(basePath))
+        (pl.schema, sortedRows(pl),
+          scannedPaths(pl).forall(_.endsWith("/base")))
+      }
+      plainScansBase && re.schema == schema && got == exp
     }
     val res = ScTest.check(
       ScTest.Parameters.default.withMinSuccessfulTests(40), prop)

@@ -11,7 +11,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 label="${1:-unlabeled}"
 out=/tmp/verify_correctness_local
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch \
+sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 $out" >/tmp/verify_cl.log 2>&1
 fails=$(grep -c '^\[verify\].*failed' /tmp/verify_cl.log || true)
 python3 tools/compare_oracle.py /root/testdata/sf0.01 "$out" \
