@@ -7,7 +7,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
-import graft.pipeline.{Deftunes, LakePaths, RunWindow}
+import graft.pipeline.{Deftunes, LakePaths, PipelineResult, RunWindow}
 import graft.sources.Source
 import graft.util.TempDirs
 
@@ -70,12 +70,15 @@ object DeftunesDemo {
     }
     val songs = Deftunes.songsPipeline(spark, paths, songsSource)
 
+    def show(r: PipelineResult): Unit = {
+      println(s"  window ${r.window.start} succeeded=${r.succeeded}")
+      r.reports.foreach(s =>
+        println(f"    ${s.stage}%-18s ${s.seconds}%6.2f s"))
+    }
     println("== backfill: api pipeline ==")
-    api.backfill(windows).foreach(r =>
-      println(s"  window ${r.window.start} succeeded=${r.succeeded}"))
+    api.backfill(windows).foreach(show)
     println("== backfill: songs pipeline ==")
-    songs.backfill(windows).foreach(r =>
-      println(s"  window ${r.window.start} succeeded=${r.succeeded}"))
+    songs.backfill(windows).foreach(show)
 
     println("== rerun window 1 (idempotence) ==")
     val before = spark.table("transform_sessions").count()

@@ -9,6 +9,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.dq.{DqRule, DqVerdict, Dqdl, NotNull, Ruleset, UniqueKey}
 import graft.lake.Lake
+import graft.util.DriverPool
 
 /** Declarative SQL-file modeling layer — the dbt analog. The
   * reference's serving layer is *authored* as SQL files plus YAML
@@ -535,46 +536,16 @@ object ModelRunner {
 
     // Execution: models run on a small driver thread pool, gated on
     // their dependencies' COMPLETION (materialization + blocking
-    // tests) — dbt's own `threads` concurrency, and the guide's
-    // overlap-independent-jobs rule: the serial loop left the cluster
-    // idle through every model's driver-side DDL/commit/gate window
-    // while sibling models had runnable work (measured q_model_runner:
-    // 1.7 s of serialized between-job driver gaps). The gate contract
-    // is unchanged — a model materializes only after every upstream
-    // model's tests passed, so a failing test still halts everything
-    // downstream; independent siblings in flight when a test fails
-    // complete (exactly dbt's behavior), and the first topo-order
-    // failure is rethrown after the pool quiesces. threads=1 keeps
-    // the strict serial order.
-    val threads = math.max(1, spark.conf
-      .get("spark.graft.model.threads", "4").toInt)
-    if (threads == 1 || order.size <= 1) order.map(execOne)
-    else {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(threads, order.size))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(pool)
-      try {
-        val futures = mutable.Map.empty[String, Future[ModelRun]]
-        // order is topological, so every dep's future exists already;
-        // deps outside `order` (unselected) were not run before this
-        // change either — filter keeps --select semantics identical
-        order.foreach { name =>
-          val depFs = rendered(name)._2.toSeq.sorted.flatMap(futures.get)
-          futures(name) =
-            Future.sequence(depFs).map(_ => execOne(name))
-        }
-        // quiesce BEFORE surfacing a failure: no zombie materialization
-        // may continue past run()'s return/throw
-        val settled = order.map(n =>
-          scala.util.Try(Await.result(futures(n), Duration.Inf)))
-        settled.collectFirst { case scala.util.Failure(e) =>
-          throw e
-        }
-        settled.map(_.get)
-      } finally pool.shutdown()
-    }
+    // tests) — dbt's own `threads` concurrency: the serial loop left the
+    // cluster idle through every model's driver-side DDL/commit/gate
+    // window while sibling models had runnable work (measured
+    // q_model_runner: 1.7 s of serialized between-job driver gaps). A
+    // model materializes only after every upstream model's tests
+    // passed, so a failing test still halts everything downstream;
+    // independent siblings in flight when a test fails complete
+    // (exactly dbt's behavior). threads=1 keeps the strict serial order.
+    val threads = spark.conf.get("spark.graft.model.threads", "4").toInt
+    // deps outside `order` (unselected) do not gate — --select semantics
+    DriverPool.gated(threads, order)(rendered(_)._2.toSeq)(execOne)
   }
 }

@@ -18,7 +18,12 @@ import org.apache.spark.sql.functions._
   */
 object StarSchema {
 
-  /** dim_songs(song_id, track_id, title, release, year) */
+  /** dim_songs(song_id, track_id, title, release, year) — a plain
+    * projection of every `transform_songs` row, as in the reference
+    * (dim_songs.sql:1-7 has no DISTINCT; only dim_artists.sql does).
+    * The songs DAG lands the full extract in each window, so after n
+    * windows every song appears n times and `song_id` is not unique
+    * here; PipelineIntegrationSpec pins 2 windows × 5 songs = 10 rows. */
   def dimSongs(songs: DataFrame): DataFrame =
     songs.select(col("song_id"), col("track_id"), col("title"),
       col("release"), col("year"))

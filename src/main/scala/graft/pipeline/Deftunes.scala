@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import scala.concurrent.ExecutionContext
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dq.Dqdl
@@ -12,6 +12,7 @@ import graft.lake.Lake
 import graft.model.{BiViews, StarSchema}
 import graft.sources.{ApiSource, CsvSource, JsonDirSource, Source}
 import graft.transform.Transforms
+import graft.util.DriverPool
 
 /** The reference's two DAGs, re-expressed as engine-native pipelines.
   *
@@ -70,8 +71,10 @@ object Deftunes {
             .withColumn("session_start_time",
               Transforms.isoToTimestamp(col("session_start_time"))),
           w.ingestDate, "api", stamp)
-        Lake.overwritePartitions(spark, users, "transform_users")
-        Lake.overwritePartitions(spark, sessions, "transform_sessions")
+        DriverPool.all(2)(
+          () => Lake.overwritePartitions(spark, users, "transform_users"),
+          () => Lake.overwritePartitions(spark, sessions,
+            "transform_sessions"))
         StageOk
       }
     val dqUsers = Stage("dq_users", Seq("json_transform")) { _ =>
@@ -127,26 +130,27 @@ object Deftunes {
 
   /** The dbt-run equivalent: materialize every serving model whose
     * silver inputs exist, then the BI views (dbt_project.yml:35-42).
-    * Serving tables are full CTAS (dbt `table` materialization). */
+    * Serving tables are full CTAS (dbt `table` materialization). No
+    * serving table reads another, so they are written concurrently
+    * (dbt's `threads`); the views are registered only after every
+    * table succeeded. */
   def modelingRun(spark: SparkSession): Unit = {
     val hasSongs = spark.catalog.tableExists("transform_songs")
     val hasSessions = spark.catalog.tableExists("transform_sessions")
     val hasUsers = spark.catalog.tableExists("transform_users")
-    if (hasSongs) {
-      val songs = spark.table("transform_songs")
-      Lake.materializeTable(spark, StarSchema.dimSongs(songs),
-        "serving_dim_songs")
-      Lake.materializeTable(spark, StarSchema.dimArtists(songs),
-        "serving_dim_artists")
+    val serving: Seq[(Boolean, String, () => DataFrame)] = Seq(
+      (hasSongs, "serving_dim_songs",
+        () => StarSchema.dimSongs(spark.table("transform_songs"))),
+      (hasSongs, "serving_dim_artists",
+        () => StarSchema.dimArtists(spark.table("transform_songs"))),
+      (hasUsers, "serving_dim_users",
+        () => StarSchema.dimUsers(spark.table("transform_users"))),
+      (hasSessions, "serving_fact_session",
+        () => StarSchema.factSession(spark.table("transform_sessions"))))
+    val writes = serving.collect { case (true, table, model) =>
+      () => Lake.materializeTable(spark, model(), table)
     }
-    if (hasUsers)
-      Lake.materializeTable(spark,
-        StarSchema.dimUsers(spark.table("transform_users")),
-        "serving_dim_users")
-    if (hasSessions)
-      Lake.materializeTable(spark,
-        StarSchema.factSession(spark.table("transform_sessions")),
-        "serving_fact_session")
+    DriverPool.all(writes.size)(writes: _*)
     // bi_views read the serving layer (sales_per_artist_vw.sql:5-7)
     if (hasSessions) {
       val fact = spark.table("serving_fact_session")

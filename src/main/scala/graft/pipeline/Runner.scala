@@ -46,8 +46,13 @@ final case class GateFailed(reason: String) extends StageOutcome
 final case class Stage(name: String, deps: Seq[String] = Nil)(
     val run: RunWindow => StageOutcome)
 
+/** One stage's result in a window. `startMs`/`endMs` are the wall-clock
+  * epoch milliseconds around all of its attempts; a stage that was
+  * skipped never ran and reports 0 for both. */
 final case class StageReport(stage: String, attempts: Int,
-    outcome: Try[StageOutcome])
+    outcome: Try[StageOutcome], startMs: Long = 0L, endMs: Long = 0L) {
+  def seconds: Double = (endMs - startMs) / 1e3
+}
 
 final case class PipelineResult(window: RunWindow, reports: Seq[StageReport]) {
   def succeeded: Boolean = reports.forall(_.outcome == Success(StageOk))
@@ -113,6 +118,14 @@ final class Pipeline(val name: String, stages: Seq[Stage],
     }
 
   private def runWithRetries(s: Stage, w: RunWindow): StageReport = {
+    val startMs = System.currentTimeMillis()
+    val (attempts, outcome) = runAttempts(s, w)
+    StageReport(s.name, attempts, outcome, startMs,
+      System.currentTimeMillis())
+  }
+
+  private def runAttempts(s: Stage, w: RunWindow)
+      : (Int, Try[StageOutcome]) = {
     var attempt = 0
     var last: Try[StageOutcome] = Failure(new IllegalStateException("not run"))
     while (attempt <= retries &&
@@ -122,13 +135,12 @@ final class Pipeline(val name: String, stages: Seq[Stage],
       last match {
         case Success(GateFailed(_)) =>
           // a DQ verdict is final — do not retry a deterministic gate
-          return StageReport(s.name, attempt,
-            Failure(new IllegalStateException(
-              s"quality gate failed: ${last.get}")))
+          return (attempt, Failure(new IllegalStateException(
+            s"quality gate failed: ${last.get}")))
         case _ => ()
       }
     }
-    StageReport(s.name, attempt, last)
+    (attempt, last)
   }
 }
 

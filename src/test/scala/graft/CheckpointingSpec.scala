@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
-import graft.util.Checkpointing
+import graft.util.{Checkpointing, TempDirs}
 
 /** The reliable-checkpoint hook: with a session checkpoint dir
   * configured, every lineage-truncation site (iterative CC rounds,
@@ -18,7 +18,7 @@ class CheckpointingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def withCheckpointDir[T](body: String => T): T = {
-    val dir = Files.createTempDirectory("graft-reliable-ckpt").toString
+    val dir = TempDirs.create("graft-reliable-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try body(dir)
     finally spark.sparkContext.setCheckpointDir(null)

@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Curation, RunWindow}
 import graft.text.TextAnalysis
+import graft.util.TempDirs
 
 class CurationSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -82,7 +83,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("curation pipeline runs end-to-end: dedup, decontaminate, split") {
-    val work = Files.createTempDirectory("curation").toString
+    val work = TempDirs.create("curation").toString
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val in = s"$work/in"; val bench = s"$work/bench"
     docs.filter($"doc_id" >= 5).write.parquet(in)
@@ -102,7 +103,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("line filters stage: boilerplate stripped, repetitive docs " +
       "dropped, and the stage stays out of the DAG by default") {
-    val work = Files.createTempDirectory("curation_lines").toString
+    val work = TempDirs.create("curation_lines").toString
     val boiler = "the quick brown fox is a common phrase for testing"
     def doc(i: Long, lines: String*) = (i, lines.mkString("\n"))
     // 12 docs carry the same boilerplate line; doc 100 is 80%
@@ -145,7 +146,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("KeepBest policy keeps the highest-quality doc of each cluster") {
-    val work = Files.createTempDirectory("curation-best").toString
+    val work = TempDirs.create("curation-best").toString
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val in = s"$work/in"; val bench = s"$work/bench"
     docs.filter($"doc_id" >= 5).write.parquet(in)
@@ -170,7 +171,7 @@ class CurationSpec extends AnyFunSuite {
   test("stage stats ride the writes: the gate's count/completeness " +
       "verdicts come from the persisted stats row, and the split " +
       "stage's KMV id sketch answers cardinality without a re-scan") {
-    val work = Files.createTempDirectory("curation_stats").toString
+    val work = TempDirs.create("curation_stats").toString
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val in = s"$work/in"; val bench = s"$work/bench"
     docs.filter($"doc_id" >= 5).write.parquet(in)
@@ -197,7 +198,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("DQ gate failure halts the split stage") {
-    val work = Files.createTempDirectory("curation-fail").toString
+    val work = TempDirs.create("curation-fail").toString
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val in = s"$work/in"; val bench = s"$work/bench"
     // benchmark == corpus → decontamination removes every doc →

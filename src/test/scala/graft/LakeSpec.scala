@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake.Lake
+import graft.util.TempDirs
 
 class LakeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -229,7 +228,7 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("landing JSON write is overwrite-idempotent and single-file") {
-    val base = Files.createTempDirectory("landing").toString
+    val base = TempDirs.create("landing").toString
     val df = Seq(("a", 1), ("b", 2)).toDF("k", "n")
     Lake.writeLandingJson(df, base, "2020_02_01")
     Lake.writeLandingJson(df, base, "2020_02_01") // rerun overwrites
@@ -243,7 +242,7 @@ class LakeSpec extends AnyFunSuite {
     // S6: the reference queries Iceberg in place via Redshift Spectrum
     // external schemas (serving/redshift.tf:9-21) — here: an external
     // parquet table over an existing directory, no data movement
-    val dir = Files.createTempDirectory("external").toString
+    val dir = TempDirs.create("external").toString
     Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       .write.mode("overwrite").parquet(dir)
     Lake.registerExternalTable(spark, "ext_songs", dir)
@@ -256,7 +255,7 @@ class LakeSpec extends AnyFunSuite {
       .tableType.name == "EXTERNAL")
     // registration is create-or-replace: re-pointing the name at a new
     // location is metadata-only and picks up the new files
-    val dir2 = Files.createTempDirectory("external2").toString
+    val dir2 = TempDirs.create("external2").toString
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
       .write.mode("overwrite").parquet(dir2)
     Lake.registerExternalTable(spark, "ext_songs", dir2)
@@ -269,7 +268,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("registerExternalTable refuses to replace a MANAGED table and " +
       "rejects unsafe identifiers/locations") {
-    val dir = Files.createTempDirectory("external3").toString
+    val dir = TempDirs.create("external3").toString
     Seq((1L, "a")).toDF("k", "v").write.mode("overwrite").parquet(dir)
     // a pre-existing MANAGED table: replacing it would DELETE its data
     // on drop — the register must refuse, not silently destroy
@@ -317,7 +316,7 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("landing CSV write with header round-trips") {
-    val base = Files.createTempDirectory("landing-csv").toString
+    val base = TempDirs.create("landing-csv").toString
     val df = Seq(("a", "1"), ("b", "2")).toDF("k", "n")
     Lake.writeLandingCsv(df, base, "2020_02_01")
     val back = spark.read.option("header", "true")

@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake.Layout
+import graft.util.TempDirs
 
 class LayoutSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -39,7 +38,7 @@ class LayoutSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(3)
     val pts = (1 to n).map(_ => (rnd.nextDouble() * 1000,
       rnd.nextDouble() * 1000)).toDF("x", "y")
-    val dir = Files.createTempDirectory("zorder").toFile.getPath
+    val dir = TempDirs.create("zorder").toFile.getPath
     val files = 16
     Layout.zOrderBy(pts, Seq(("x", 0.0, 1000.0), ("y", 0.0, 1000.0)),
       numFiles = files).write.mode("overwrite").parquet(dir)
@@ -65,8 +64,8 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compact merges small files losslessly") {
-    val dir = Files.createTempDirectory("compact-in").toFile.getPath
-    val out = Files.createTempDirectory("compact-out").toFile.getPath
+    val dir = TempDirs.create("compact-in").toFile.getPath
+    val out = TempDirs.create("compact-out").toFile.getPath
     spark.range(1000).repartition(50).write.mode("overwrite").parquet(dir)
     val inFiles = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
@@ -83,8 +82,7 @@ class LayoutSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-skip").toString
+    val dir = TempDirs.create("graft-skip").toString
     (1 to 1000).map(i => (i.toLong, i % 100))
       .toDF("v", "payload")
       .repartitionByRange(10, col("v"))
@@ -107,8 +105,7 @@ class LayoutSpec extends AnyFunSuite {
     assert(empty.count() == 0)
     assert(empty.columns.toSeq == Seq("v", "payload"))
     // an all-null stats column never matches a range
-    val nulldir = java.nio.file.Files
-      .createTempDirectory("graft-skip-null").toString
+    val nulldir = TempDirs.create("graft-skip-null").toString
     Seq[(java.lang.Long, Int)]((null, 1), (null, 2)).toDF("v", "payload")
       .coalesce(1).write.mode("overwrite").parquet(nulldir)
     val nullman = Layout.collectFileStats(spark, nulldir, Seq("v"))
@@ -117,8 +114,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("stale manifest raises instead of silently under-reading") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stale").toString
+    val dir = TempDirs.create("graft-stale").toString
     spark.range(100).toDF("v")
       .coalesce(2).write.mode("overwrite").parquet(dir)
     val manifest = Layout.collectFileStats(spark, dir, Seq("v"))
@@ -144,8 +140,7 @@ class LayoutSpec extends AnyFunSuite {
       "driver-side path list and matches the full-scan filter") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-skip-10k").toString
+    val dir = TempDirs.create("graft-skip-10k").toString
     // 10,000 physical files, one narrow value range each
     spark.range(100000).select(col("id").as("v"))
       .repartitionByRange(10000, col("v"))

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{MiniYaml, ModelCycleException, ModelRunner,
   ModelTestFailedException}
+import graft.util.TempDirs
 
 /** Declarative SQL-file model runner (the dbt analog): parsing of the
   * reference-shaped authoring surface, templating, dependency order,
@@ -15,7 +16,7 @@ class ModelRunnerSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def writeProject(files: Seq[(String, String)]): Path = {
-    val root = Files.createTempDirectory("mr-spec")
+    val root = TempDirs.create("mr-spec")
     files.foreach { case (rel, content) =>
       val p = root.resolve(rel)
       Files.createDirectories(p.getParent)

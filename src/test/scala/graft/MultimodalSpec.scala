@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.{ByteEmbedders, Multimodal}
+import graft.util.TempDirs
 
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -37,7 +38,7 @@ class MultimodalSpec extends AnyFunSuite {
     val expected = Multimodal.mediaSchema.fields.map(_.name).toSeq
     assert(df.columns.toSeq == expected)
     // parquet round-trip preserves binary + struct metadata
-    val p = java.nio.file.Files.createTempDirectory("media").toString
+    val p = TempDirs.create("media").toString
     df.write.mode("overwrite").parquet(p)
     val back = spark.read.parquet(p)
     assert(back.count() == 3)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.LocalDate
 
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -10,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline._
 import graft.sources.Source
+import graft.util.TempDirs
 
 /** Golden end-to-end test: both reference DAGs over two consecutive
   * monthly windows on fixture data — landing → silver (partitioned) →
@@ -29,7 +29,7 @@ class PipelineIntegrationSpec extends AnyFunSuite {
   }
 
   test("api + songs pipelines over two windows, then idempotent rerun") {
-    val paths = LakePaths(Files.createTempDirectory("lake").toString)
+    val paths = LakePaths(TempDirs.create("lake").toString)
     val windows = RunWindow.monthly(LocalDate.parse("2020-01-01"),
       LocalDate.parse("2020-03-01"))
     assert(windows.length == 2)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.similarity.Pq
+import graft.util.TempDirs
 
 /** Product quantization: training determinism, codegen/eval parity,
   * compression shape, and ADC retrieval quality against exact L2. */
@@ -43,7 +44,7 @@ class PqSpec extends AnyFunSuite {
 
   test("model save/load round-trips bit-exactly (loaded model " +
       "encodes identically)") {
-    val dir = java.nio.file.Files.createTempDirectory("pq-model").toString
+    val dir = TempDirs.create("pq-model").toString
     Pq.PqModel.save(spark, model, s"$dir/cb")
     val loaded = Pq.PqModel.load(spark, s"$dir/cb")
     assert(loaded == model)

@@ -1,7 +1,7 @@
 package graft
 
 import java.time.LocalDate
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.util.Success
@@ -9,6 +9,7 @@ import scala.util.Success
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline._
+import graft.util.TempDirs
 
 class RunnerSpec extends AnyFunSuite {
 
@@ -26,11 +27,21 @@ class RunnerSpec extends AnyFunSuite {
 
   test("stages run in dependency order with fan-out") {
     val log = new ConcurrentLinkedQueue[String]()
+    // each extract waits (up to 10 s) until both have started, then
+    // holds 20 ms: run concurrently, their stage timings overlap by at
+    // least that; run one after the other, they cannot overlap
+    val extracts = new CountDownLatch(2)
     def stage(n: String, deps: String*) =
       Stage(n, deps)(_ => { log.add(n); StageOk })
+    def extract(n: String) = Stage(n, Seq("start"))(_ => {
+      extracts.countDown()
+      extracts.await(10, TimeUnit.SECONDS)
+      Thread.sleep(20)
+      log.add(n); StageOk
+    })
     val p = new Pipeline("api", Seq(
       stage("start"),
-      stage("users_extract", "start"), stage("sessions_extract", "start"),
+      extract("users_extract"), extract("sessions_extract"),
       stage("transform", "users_extract", "sessions_extract"),
       stage("dq_users", "transform"), stage("dq_sessions", "transform"),
       stage("dbt", "dq_users", "dq_sessions")))
@@ -40,6 +51,13 @@ class RunnerSpec extends AnyFunSuite {
     assert(order.indexOf("transform") > order.indexOf("users_extract"))
     assert(order.indexOf("transform") > order.indexOf("sessions_extract"))
     assert(order.indexOf("dbt") > order.indexOf("dq_users"))
+    res.reports.foreach(r => assert(r.endMs >= r.startMs, r.stage))
+    val (u, s) = (res.report("users_extract").get,
+      res.report("sessions_extract").get)
+    assert(math.min(u.endMs, s.endMs) > math.max(u.startMs, s.startMs),
+      s"extracts did not overlap: $u $s")
+    assert(res.report("transform").get.startMs >=
+      math.max(u.endMs, s.endMs))
   }
 
   test("a failed DQ gate halts downstream stages, not siblings") {
@@ -89,8 +107,7 @@ class RunnerSpec extends AnyFunSuite {
   }
 
   test("ledgered backfill resumes where a crashed run stopped") {
-    val ledger = java.nio.file.Files
-      .createTempDirectory("runledger").toString
+    val ledger = TempDirs.create("runledger").toString
     val windows = RunWindow.monthly(
       LocalDate.parse("2020-02-01"), LocalDate.parse("2020-05-01"))
     val ran = new ConcurrentLinkedQueue[String]()

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{ModelRunner, Scd2}
+import graft.util.TempDirs
 
 /** SCD2: one-pass historize from a change log, snapshot-merge
   * advancement (dbt `timestamp` strategy), and the ModelRunner
@@ -111,7 +112,7 @@ class Scd2Spec extends AnyFunSuite {
   }
 
   private def writeProject(files: Seq[(String, String)]): Path = {
-    val root = Files.createTempDirectory("scd2-spec")
+    val root = TempDirs.create("scd2-spec")
     files.foreach { case (rel, content) =>
       val p = root.resolve(rel)
       Files.createDirectories(p.getParent)

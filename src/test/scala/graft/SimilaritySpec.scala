@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.similarity.Similarity
+import graft.util.TempDirs
 
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -99,7 +100,7 @@ class SimilaritySpec extends AnyFunSuite {
 
     // save/load round-trips the index bit-exactly: identical centroids,
     // identical assignment — train once, search in any later session
-    val dir = java.nio.file.Files.createTempDirectory("ivf-model").toString
+    val dir = TempDirs.create("ivf-model").toString
     Ivf.IvfModel.save(spark, model, dir)
     val back = Ivf.IvfModel.load(spark, dir)
     assert(back == model)

@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake.Snapshots
+import graft.util.TempDirs
 
 class SnapshotsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-snap").toString
+    TempDirs.create("graft-snap").toString
 
   private def table(ids: Range) =
     ids.map(i => (i.toLong, s"row_$i")).toDF("id", "payload")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources._
+import graft.util.TempDirs
 
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -95,7 +96,7 @@ class SourcesSpec extends AnyFunSuite {
     // the S3-analog of the HTTP test above, closing the "JdbcSource
     // only ever saw fixtures" gap. Embedded mode runs in-JVM, which is
     // exactly where Spark local executors issue their range queries.
-    val dbDir = Files.createTempDirectory("derby").toString
+    val dbDir = TempDirs.create("derby").toString
     val url = s"jdbc:derby:$dbDir/graftdb;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     try {
@@ -137,7 +138,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("OrcSource round-trips a parquet-equivalent table") {
-    val dir = Files.createTempDirectory("orc-src").toString
+    val dir = TempDirs.create("orc-src").toString
     val data = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "v")
     data.write.mode("overwrite").orc(dir)
     val back = OrcSource(dir).read(spark)
@@ -150,7 +151,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("CsvWithQuarantineSource splits good rows from malformed lines") {
-    val dir = Files.createTempDirectory("csv-quarantine").toString
+    val dir = TempDirs.create("csv-quarantine").toString
     Files.writeString(java.nio.file.Paths.get(s"$dir/data.csv"),
       Seq("id,name,score",
         "1,alice,9.5",

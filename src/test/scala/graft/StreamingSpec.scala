@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{StatefulOps, StreamingIngest}
+import graft.util.TempDirs
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -24,8 +25,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("ingestNovel appends only unseen docs across drains") {
-    val base = Files.createTempDirectory("novel-landing").toString
-    val ckpt = Files.createTempDirectory("novel-ckpt").toString
+    val base = TempDirs.create("novel-landing").toString
+    val ckpt = TempDirs.create("novel-ckpt").toString
     val tbl = "stream_novel_t"
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
@@ -50,9 +51,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("file-stream ingest with AvailableNow drains landing exactly once") {
-    val base = Files.createTempDirectory("stream-landing").toString
-    val out = Files.createTempDirectory("stream-out").toString
-    val ckpt = Files.createTempDirectory("stream-ckpt").toString
+    val base = TempDirs.create("stream-landing").toString
+    val out = TempDirs.create("stream-out").toString
+    val ckpt = TempDirs.create("stream-ckpt").toString
     writeLanding(base, (1 to 20).map(i =>
       s"""{"user_id":${i % 3},"ts":"2024-01-01T00:0${i % 10}:00.000Z","event_type":"play","value":$i.0}"""))
     val stream = StreamingIngest.readLandingStream(spark, base, eventSchema)
@@ -66,7 +67,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("watermarked windowed aggregation matches the batch equivalent") {
-    val base = Files.createTempDirectory("stream-landing2").toString
+    val base = TempDirs.create("stream-landing2").toString
     writeLanding(base, (0 until 60).map(i =>
       s"""{"user_id":${i % 5},"ts":"2024-01-01T0${i / 30}:${"%02d".format(i % 30)}:00.000Z","event_type":"${if (i % 2 == 0) "play" else "pause"}","value":1.0}"""))
     val agg = StreamingIngest.windowedEventAgg(
@@ -91,7 +92,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming dedup drops within-watermark re-deliveries") {
-    val base = Files.createTempDirectory("stream-dedup").toString
+    val base = TempDirs.create("stream-dedup").toString
     // 30 logical events, each delivered twice (at-least-once source)
     val rows = (0 until 30).flatMap { i =>
       val r = s"""{"user_id":$i,"ts":"2024-01-01T00:${"%02d".format(i % 30)}:00.000Z","event_type":"play","value":1.0}"""
@@ -112,7 +113,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join matches the batch equivalent") {
-    val base = Files.createTempDirectory("stream-ssjoin").toString
+    val base = TempDirs.create("stream-ssjoin").toString
     // user 1: click at :00 → buys at :05 (match) and :45 (outside 30m);
     // user 2: click at :10 → buy at :20 (match); user 3: buy with no
     // click; a buy BEFORE user 1's click must not match either
@@ -145,7 +146,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("enrichStream broadcast-joins a static dim without dropping rows") {
-    val base = Files.createTempDirectory("stream-enrich").toString
+    val base = TempDirs.create("stream-enrich").toString
     writeLanding(base, Seq(
       """{"user_id":1,"ts":"2024-01-01T00:00:00.000Z","event_type":"play","value":1.0}""",
       """{"user_id":2,"ts":"2024-01-01T00:01:00.000Z","event_type":"play","value":2.0}""",
@@ -167,8 +168,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("sinkToSilver lands a stream as a partitioned catalog table") {
-    val base = Files.createTempDirectory("stream-silver").toString
-    val ckpt = Files.createTempDirectory("stream-silver-ckpt").toString
+    val base = TempDirs.create("stream-silver").toString
+    val ckpt = TempDirs.create("stream-silver-ckpt").toString
     writeLanding(base, (1 to 12).map(i =>
       s"""{"user_id":$i,"ts":"2024-01-01T00:0${i % 10}:00.000Z","event_type":"play","value":$i.0}"""))
     val tbl = "silver_stream_events"
@@ -204,7 +205,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("partition ledger: replays idempotent, cross-batch overlap flagged") {
-    val ckpt = Files.createTempDirectory("ledger").toString
+    val ckpt = TempDirs.create("ledger").toString
     val ledger = new StreamingIngest.PartitionLedger(spark, ckpt)
     ledger.record(0L, Set[Any]("2024-01-01", "2024-01-02"))
     // a crash-REPLAY of batch 0 re-lands the same partitions — not a
@@ -228,7 +229,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("transformWithState caps per-key contributions across batches") {
     import StreamingIngest.Event
-    val base = Files.createTempDirectory("stream-cap").toString
+    val base = TempDirs.create("stream-cap").toString
     def row(u: Long, m: Int) =
       s"""{"user_id":$u,"ts":"2024-01-01T00:${"%02d".format(m)}:00.000Z","event_type":"play","value":1.0}"""
     // user 1 floods (10 rows), user 2 stays under the cap (2 rows)
@@ -243,8 +244,8 @@ class StreamingSpec extends AnyFunSuite {
       val capped = StatefulOps.capPerKey(
         events, (e: Event) => e.user_id, maxPerKey = 3L)
       assert(capped.isStreaming)
-      val out = Files.createTempDirectory("stream-cap-out").toString
-      val ckpt = Files.createTempDirectory("stream-cap-ckpt").toString
+      val out = TempDirs.create("stream-cap-out").toString
+      val ckpt = TempDirs.create("stream-cap-ckpt").toString
       def drain(): Unit =
         StreamingIngest.runAvailableNow(capped.toDF(), out, ckpt)
       def countsByUser(): Map[Long, Long] =
@@ -273,7 +274,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming funnel advances per-key stages across batches and " +
       "never retracts") {
     import StatefulOps.FunnelEvent
-    val base = Files.createTempDirectory("stream-funnel").toString
+    val base = TempDirs.create("stream-funnel").toString
     def row(u: Long, hms: String, t: String) =
       s"""{"user_id":$u,"ts":"2024-01-01T$hms.000Z","event_type":"$t"}"""
     def addFile(name: String, rows: Seq[String]): Unit =
@@ -299,8 +300,8 @@ class StreamingSpec extends AnyFunSuite {
         spark.readStream.schema(schema).json(base).as[FunnelEvent],
         stages = Seq("view", "click", "purchase"))
       assert(hits.isStreaming)
-      val out = Files.createTempDirectory("stream-funnel-out").toString
-      val ckpt = Files.createTempDirectory("stream-funnel-ckpt").toString
+      val out = TempDirs.create("stream-funnel-out").toString
+      val ckpt = TempDirs.create("stream-funnel-ckpt").toString
       def drain(): Unit =
         StreamingIngest.runAvailableNow(hits.toDF(), out, ckpt)
       def read(): Set[(Long, Int)] =
@@ -337,7 +338,7 @@ class StreamingSpec extends AnyFunSuite {
   test("timer-based sessionization (transformWithState event-time " +
       "timers) flushes the open session when the watermark passes") {
     import StatefulOps.{SessEvent, SessionOut}
-    val base = Files.createTempDirectory("stream-sess-t").toString
+    val base = TempDirs.create("stream-sess-t").toString
     def row(u: Long, hms: String) =
       s"""{"user_id":$u,"ts":"2024-01-01T$hms.000Z"}"""
     def addFile(name: String, rows: Seq[String]): Unit =
@@ -359,8 +360,8 @@ class StreamingSpec extends AnyFunSuite {
       val sessions = StatefulOps.sessionizeWithTimers(events,
         gapMs = 60000L, watermarkDelay = "10 seconds")
       assert(sessions.isStreaming)
-      val out = Files.createTempDirectory("stream-sess-t-out").toString
-      val ckpt = Files.createTempDirectory("stream-sess-t-ckpt").toString
+      val out = TempDirs.create("stream-sess-t-out").toString
+      val ckpt = TempDirs.create("stream-sess-t-ckpt").toString
       def drain(): Unit =
         StreamingIngest.runAvailableNow(sessions.toDF(), out, ckpt)
       def read(): Set[(Long, Long, Long, Long)] =
@@ -416,8 +417,7 @@ class StreamingSpec extends AnyFunSuite {
   test("KMV sketch state survives the state store across microbatches " +
       "and drains to the exact batch value") {
     import graft.functions.KmvFunctions._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-kmv-stream").toString
+    val root = TempDirs.create("graft-kmv-stream").toString
     // 4 separate files + maxFilesPerTrigger=1 → 4 microbatches: the
     // TypedImperativeAggregate buffer must serialize through the
     // state store between every pair of batches
@@ -448,8 +448,7 @@ class StreamingSpec extends AnyFunSuite {
   test("kmv_sample pair-buffer state survives the state store across " +
       "microbatches and drains to the exact batch sample") {
     import graft.functions.KmvFunctions._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-kmv-sample-stream").toString
+    val root = TempDirs.create("graft-kmv-sample-stream").toString
     // 4 microbatches: the (hash, value) TreeSet must round-trip the
     // state store's serialize/deserialize between every pair
     val rows = (1 to 200).map(i => (s"g${i % 2}", i.toLong, i * 2.0))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.{SummaryCatalog, SummaryRewrite}
+import graft.util.TempDirs
 
 /** The materialized-rollup rewrite (plans/SummaryRewrite.scala) is a
   * LIVE optimizer rule in every production session — any defect in it
@@ -41,8 +42,7 @@ class SummaryRewriteSpec extends AnyFunSuite {
   private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
 
-  private lazy val root = java.nio.file.Files
-    .createTempDirectory("graft-rollup").toString
+  private lazy val root = TempDirs.create("graft-rollup").toString
   private lazy val basePath = s"$root/base"
   private lazy val sumPath = s"$root/summary"
 
