@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
-import graft.util.Checkpointing
+import graft.util.{Checkpointing, Parallelism}
 
 /** Deduplication operators for 100 TB-scale corpora: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, and embedding-cosine near-dup.
@@ -97,32 +97,6 @@ object Dedup {
   def releaseCaches(): Unit = synchronized {
     persistedDfs.foreach(_.unpersist(false))
     persistedDfs.clear()
-  }
-
-  /** Spread the expensive per-row stage across the cluster when the
-    * upstream scan under-parallelizes (small files, single row-group
-    * parquet): if the plan has fewer partitions than the scheduler's
-    * parallelism, repartition up; otherwise no-op. At 100 TB a scan
-    * already has thousands of splits and this adds nothing — the guard
-    * exists so the signature/hash compute never serializes onto a
-    * handful of cores just because the input arrived in few splits.
-    *
-    * The partition-count probe runs ONLY on exchange-free plans
-    * (scan + narrow ops): under AQE, `df.rdd` on a plan with shuffles
-    * would materialize every query stage just to read a count, and
-    * that work is thrown away. A plan that already shuffles has its
-    * parallelism set by shuffle.partitions/AQE anyway — nothing to
-    * fix. */
-  private def ensureParallelism(df: DataFrame): DataFrame = {
-    val hasExchange = df.queryExecution.sparkPlan.exists {
-      case _: org.apache.spark.sql.execution.exchange.Exchange => true
-      case _ => false
-    }
-    if (hasExchange) df
-    else {
-      val target = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-    }
   }
 
   /** Persist + materialize a multi-consumer intermediate. Without the
@@ -294,7 +268,10 @@ object Dedup {
       s"windowWords must be > 1 (got $windowWords); use exactDedup " +
         "for single-token keys")
     val k = windowWords
-    val base = spanTokenize(df, idCol, textCol)
+    val spark = df.sparkSession
+    // a corpus that arrived in fewer splits than cores (one small file)
+    // would window and reassemble on one task
+    val base = Parallelism.spread(spanTokenize(df, idCol, textCol), idCol)
     // ONE explicit exchange on the window key, shared by BOTH
     // consumers (winner election and the removals join): the two
     // subtrees below reference the identical repartition node, so
@@ -306,9 +283,14 @@ object Dedup {
     // at corpus scale where caching the expansion would not (SCALING:
     // columnar-caching the token frames tripled the ×100 wall). The
     // downstream groupBy and the equi-join both key on __key, so
-    // neither adds another exchange.
+    // neither adds another exchange. The partition count is explicit
+    // (the session's shuffle partitions, at least one per core): AQE
+    // sizes partitions by bytes and would coalesce a few MB of windows
+    // into one task, while the cost here is per-row string work.
     val windows = spanWindows(base, idCol, k, hashKeys)
-      .repartition(col("__key"))
+      .repartition(math.max(spark.sparkContext.defaultParallelism,
+        spark.conf.get("spark.sql.shuffle.partitions").toInt),
+        col("__key"))
     // winner election: ONE aggregation per distinct window key
     val winners = windows
       .groupBy(col("__key").as("__win_key"))
@@ -690,8 +672,8 @@ object Dedup {
   def buildMinHashIndex(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, k: Int = 64, bands: Int = 16): MinHashIndex = {
     val withSig = persistEager(
-      ensureParallelism(df.select(col(idCol).as("id"),
-          col(textCol).as("__text")))
+      Parallelism.spread(df.select(col(idCol).as("id"),
+          col(textCol).as("__text")), "id")
         .select(col("id"),
           shingleHashes(col("__text"), shingleSize).as("sh"))
         .filter(size(col("sh")) > 0)
@@ -1272,8 +1254,8 @@ object Dedup {
     // re-tokenize and re-simhash the whole corpus on the probe pass.
     // Payload is 16 bytes/doc (id + simhash), the cheapest possible
     // insurance; the cheap chunk explode above it recomputes freely.
-    val withSim = persistEager(ensureParallelism(
-      df.select(col(idCol).as("id"), col(textCol).as("__text")))
+    val withSim = persistEager(Parallelism.spread(
+      df.select(col(idCol).as("id"), col(textCol).as("__text")), "id")
       .select(col("id"),
         simHash64(graft.text.TextAnalysis.tokens(col("__text"))).as("sim")))
     val chunked = withSim.select(col("id"), col("sim"),
@@ -1330,8 +1312,8 @@ object Dedup {
     // overflow, the probe recomputes the hyperplane bucketing — one
     // extra narrow map over the vectors, cheaper than always caching
     // the duplicated payload
-    val bucketed = ensureParallelism(df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v")))
+    val bucketed = Parallelism.spread(df.select(col(idCol).as("id"),
+      col(vecCol).cast("array<double>").as("v")), "id")
       .select(col("id"), col("v"), explode(Similarity
         .hyperplaneBucketTables(col("v"), tables, planesPerTable, dim)).as("bk"))
       .select(col("id"), col("v"), col("bk.tbl").as("tbl"),
@@ -1380,8 +1362,8 @@ object Dedup {
     // at the k≈√n sizes the scale recipe calls for) re-evaluates for
     // the anti-join
     val base = persistEager(
-      ensureParallelism(df.select(col(idCol).as("id"),
-          col(vecCol).cast("array<double>").as("v")))
+      Parallelism.spread(df.select(col(idCol).as("id"),
+          col(vecCol).cast("array<double>").as("v")), "id")
         .withColumn("cell", Ivf.assignCell(col("v"), model)))
     val a = base.select(col("cell"), col("id").as("a_id"),
       col("v").as("a_v"))

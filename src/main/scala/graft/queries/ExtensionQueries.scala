@@ -10,7 +10,7 @@ import graft.dq.{ApproxDistinctness, Dqdl, Ruleset}
 import graft.multimodal.Multimodal
 import graft.similarity.{Ivf, Ivfpq, Pq, Similarity}
 import graft.text.{Retrieval, TextAnalysis}
-import graft.util.{Checkpointing, Tables, TempDirs}
+import graft.util.{Checkpointing, Parallelism, Tables, TempDirs}
 
 /** The beyond-reference operators a large-scale training-data pipeline
   * needs (BASELINE.json north star): dedup in five flavors, ANN
@@ -1662,7 +1662,8 @@ object ExtensionQueries {
               |n_tokens > 1024 AS oversize FROM p""".stripMargin)),
 
     QueryDef("q_text_quality",
-      (s, d) => Tables.documents(s, d).select(col("doc_id"),
+      (s, d) => Parallelism.spread(Tables.documents(s, d), "doc_id")
+        .select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"),
         TextAnalysis.punctRatio(col("text")).as("punct_ratio"),
         TextAnalysis.stopwordRatio(col("text")).as("stopword_ratio"),
@@ -2723,18 +2724,13 @@ object ExtensionQueries {
     QueryDef("q_image_near_dup",
       (s, d) => {
         val gen = udf { id: Long => syntheticGrayPng(id) }
-        // repartition the ID column before rendering: the documents
-        // scan is 1-2 input splits at this SF, which would serialize
-        // every PNG encode+decode on one task. Shuffling longs is
-        // free; the O(pixels) work then spreads across all cores —
-        // the same shape a real lake gives for free (many files) or
-        // buys with one ids-only shuffle
-        // the count is PINNED (repartition-by-num): AQE's partition
-        // coalescing would fold a no-count repartition of 40 KB of
-        // ids back into one task and re-serialize the decode
-        val media = Tables.documents(s, d)
-          .select(col("doc_id"))
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+        // spread the ids before rendering: the documents scan is 1-2
+        // input splits at this SF, which would serialize every PNG
+        // encode+decode on one task. Shuffling longs is free; the
+        // O(pixels) work then runs on every core — the shape a real
+        // lake gives for free (many files)
+        val media = Parallelism.spread(
+            Tables.documents(s, d).select(col("doc_id")), "doc_id")
           .select(col("doc_id"), gen(col("doc_id")).as("bytes"))
         Multimodal.imageNearDup(s, media, "doc_id", "bytes", maxHamming = 4)
       },
@@ -2768,10 +2764,10 @@ object ExtensionQueries {
     QueryDef("q_video_frames",
       (s, d) => {
         val gen = udf { id: Long => syntheticMp4(id) }
-        // repartition ids first: same O(bytes) work-spreading shape as
+        // spread ids first: same O(bytes) work-spreading shape as
         // q_image_near_dup (the scan is 1-2 splits at this SF)
-        Tables.documents(s, d).select(col("doc_id"))
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+        Parallelism.spread(
+            Tables.documents(s, d).select(col("doc_id")), "doc_id")
           .select(col("doc_id").as("media_id"),
             Multimodal.sampleFrames(gen(col("doc_id")), lit(8))
               .as("frames"))
@@ -2802,9 +2798,8 @@ object ExtensionQueries {
     QueryDef("q_video_pixels",
       (s, d) => {
         val gen = udf { id: Long => syntheticMjpegMp4(id) }
-        Tables.documents(s, d).select(col("doc_id"))
-          .filter(col("doc_id") % 10 === 0)
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+        Parallelism.spread(Tables.documents(s, d).select(col("doc_id"))
+            .filter(col("doc_id") % 10 === 0), "doc_id")
           .select(col("doc_id").as("media_id"),
             posexplode(Multimodal.videoFrameStats(gen(col("doc_id")),
               lit(8))))

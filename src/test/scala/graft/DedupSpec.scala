@@ -101,6 +101,28 @@ class DedupSpec extends AnyFunSuite {
     assert(hashed == out, s"hashed-key mode diverged: $hashed")
   }
 
+  test("slidingSpanDedup gives identical rows from one input partition " +
+      "(spread over every core) and from seven") {
+    // 60 docs over a 5-word vocabulary: most 3-word windows repeat
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("a", "b", "c", "d", "e")
+    val rows = (1L to 60L).map(id => id ->
+      Seq.fill(4 + rnd.nextInt(20))(vocab(rnd.nextInt(5))).mkString(" "))
+    val one = rows.toDF("doc_id", "text").coalesce(1)
+    val seven = rows.toDF("doc_id", "text").repartition(7)
+    assert(one.rdd.getNumPartitions == 1 && seven.rdd.getNumPartitions == 7)
+    for (hashKeys <- Seq(false, true)) {
+      def run(df: org.apache.spark.sql.DataFrame) =
+        Dedup.slidingSpanDedup(df, "doc_id", "text", windowWords = 3,
+          hashKeys = hashKeys).collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
+      val fromOne = run(one)
+      assert(fromOne == run(seven), s"hashKeys=$hashKeys")
+      assert(fromOne.map(_._3).sum < rows.map(_._2.split(" ").length).sum,
+        "no window was removed: the corpus tests nothing")
+    }
+  }
+
   test("slidingSpanDedupIncremental equals the full-corpus op " +
       "restricted to the batch; re-ingest and param drift fail loudly") {
     val corpus = Seq(

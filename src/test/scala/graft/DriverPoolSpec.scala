@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.DriverPool
@@ -52,5 +53,52 @@ class DriverPoolSpec extends AnyFunSuite {
       () => { log.add((i, Thread.currentThread())); i }): _*)
     assert(out == (0 until 4))
     assert(log.asScala.toSeq == (0 until 4).map(_ -> Thread.currentThread()))
+  }
+
+  /** Runs `tasks` on the pool from a frame of its own: a job whose call
+    * site names this method was attributed to the pool's caller. */
+  private def poolCaller(threads: Int)(tasks: (() => Long)*): Seq[Long] =
+    DriverPool.all(threads)(tasks: _*)
+
+  test("jobs started on pool threads carry the caller's call site, and " +
+    "the calling thread's own call site is untouched") {
+    val spark = SparkTestSession.spark
+    val sc = spark.sparkContext
+    val sites = new ConcurrentLinkedQueue[(String, String)]()
+    val marker = "graft.test.pool"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(marker)))
+          .foreach(m => sites.add(m ->
+            e.stageInfos.headOption.map(_.details).getOrElse("")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(marker, "pool")
+      val after = new ConcurrentLinkedQueue[Option[String]]()
+      val job = () => {
+        val n = spark.range(10).count()
+        after.add(Option(sc.getLocalProperty("callSite.long")))
+        n
+      }
+      assert(poolCaller(2)(job, job) == Seq(10L, 10L))
+      assert(after.asScala.forall(_.exists(_.contains("poolCaller"))))
+      assert(sc.getLocalProperty("callSite.long") == null,
+        "the calling thread's call site was touched")
+      sc.setLocalProperty(marker, "sentinel")
+      spark.range(1).count()
+      val deadline = System.currentTimeMillis + 10000
+      while (!sites.asScala.exists(_._1 == "sentinel") &&
+        System.currentTimeMillis < deadline) Thread.sleep(20)
+      val pooled = sites.asScala.collect { case ("pool", d) => d }.toSeq
+      assert(pooled.size >= 2)
+      pooled.foreach { d =>
+        assert(d.linesIterator.next().contains("DriverPoolSpec.poolCaller"), d)
+        assert(!d.contains("graft.util.DriverPool"), d)
+      }
+    } finally {
+      sc.setLocalProperty(marker, null)
+      sc.removeSparkListener(listener)
+    }
   }
 }

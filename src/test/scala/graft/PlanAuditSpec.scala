@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits for the breadth slate: asserts each query
@@ -857,5 +860,64 @@ class PlanAuditSpec extends AnyFunSuite {
     val np = plan("q_top_ngram_frac")
     assert(!np.contains("Exchange"), s"q_top_ngram_frac must not shuffle:\n$np")
     assert(!np.contains("ScalaUDF"), np)
+  }
+
+  /** Every node of a query's FINAL plan, after one collect: adaptive
+    * plans and query stages are leaves to `collect`, so walk into them. */
+  private def finalNodes(q: String): Seq[SparkPlan] = {
+    val df = SparkEntry.queries(q)(spark, sf)
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case _ => p.children.flatMap(walk)
+    })
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("sliding-span dedup: the window exchange is pinned to a partition " +
+      "per core, never coalesced, and read twice through a ReusedExchange") {
+    val nodes = finalNodes("q_dedup_sliding_spans")
+    def onKey(e: ShuffleExchangeExec) =
+      e.outputPartitioning.toString.contains("__key")
+    val keyed = nodes.collect { case e: ShuffleExchangeExec if onKey(e) => e }
+    assert(keyed.size == 1, nodes.head.treeString)
+    assert(keyed.head.shuffleOrigin == REPARTITION_BY_NUM)
+    assert(keyed.head.outputPartitioning.numPartitions >=
+      spark.sparkContext.defaultParallelism)
+    assert(nodes.exists {
+      case r: ReusedExchangeExec =>
+        r.child.isInstanceOf[ShuffleExchangeExec] &&
+          onKey(r.child.asInstanceOf[ShuffleExchangeExec])
+      case _ => false
+    }, s"no ReusedExchange of the __key exchange:\n${nodes.head.treeString}")
+    val coalescedOverKey = nodes.exists {
+      case r: AQEShuffleReadExec => r.hasCoalescedPartition &&
+        r.child.collectFirst { case s: QueryStageExec => s.plan }.exists {
+          case e: ShuffleExchangeExec => onKey(e)
+          case e: ReusedExchangeExec => e.child.outputPartitioning
+            .toString.contains("__key")
+          case _ => false
+        }
+      case _ => false
+    }
+    assert(!coalescedOverKey, nodes.head.treeString)
+  }
+
+  test("text quality reads the single-split documents scan through the " +
+      "spread exchange") {
+    assume(spark.sparkContext.defaultParallelism > 1,
+      "one slot: nothing to spread over")
+    val nodes = finalNodes("q_text_quality")
+    val spread = nodes.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }
+    assert(spread.size == 1, nodes.head.treeString)
+    assert(spread.head.outputPartitioning.toString.contains("doc_id"))
+    assert(spread.head.outputPartitioning.numPartitions ==
+      spark.sparkContext.defaultParallelism)
+    assert(spread.head.collectFirst { case f: FileSourceScanExec =>
+      f.relation.location.rootPaths.mkString }
+      .exists(_.endsWith("documents.parquet")), nodes.head.treeString)
   }
 }
