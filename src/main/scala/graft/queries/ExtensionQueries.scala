@@ -64,39 +64,18 @@ object ExtensionQueries {
   final case class QuotaRow(event_id: Long, user_id: Long)
 
   /** The events table as a checkpointable file STREAM with `ts`
-    * normalized to a session-timezone microsecond timestamp.
-    * Streaming reads don't infer schema, and the parquet
-    * TIMESTAMP(NANOS) scan type varies by Spark build (nanos-as-long
-    * under the legacy conf vs native TIMESTAMP_NTZ — the conf may be
-    * ignored), so probe the type with a batch read and hand the
-    * file-stream source the RAW scan schema it will actually see,
-    * then apply the matching normalization (mirrors
-    * util.Tables.events). */
+    * normalized as [[graft.util.Tables.events]] normalizes it.
+    * Streaming reads don't infer schema, so the file-stream source gets
+    * the batch scan's schema. */
   private def eventStream(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsScanType = s.read.parquet(s"$d/events.parquet")
-      .schema("ts").dataType
+      d: String): org.apache.spark.sql.DataFrame =
     // events.parquet is a single file; the file-stream source wants a
     // directory to watch, so stream the data dir with a name filter
     // selecting just the events table
-    val raw = s.readStream.option("pathGlobFilter", "events.parquet")
-      .schema(StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("ts", tsScanType),
-        StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType),
-        StructField("props", StringType))))
-      .parquet(d)
-    val tsNorm = tsScanType match {
-      case LongType         => timestamp_micros(expr("ts div 1000"))
-      case TimestampNTZType => col("ts").cast(TimestampType)
-      case _                => col("ts")
-    }
-    raw.withColumn("ts", tsNorm)
-  }
+    Tables.withEventTs(s.readStream
+      .option("pathGlobFilter", "events.parquet")
+      .schema(Tables.load(s, d, "events").schema)
+      .parquet(d))
 
   /** Snapshot scratch tables built by q_snapshot_read/_merge, one per
     * (query, data dir) per process — the commit sequence is

@@ -2,17 +2,15 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
-import org.apache.spark.sql.util.QueryExecutionListener
+import graft.util.Telemetry
 
-/** Dump the formatted explain of named slate queries' EXECUTED plans to
-  * files — the plan evidence the optimization rounds commit under
-  * plans/rNN/. Each query runs once with a noop write; the plan written
-  * is the one that write executed, so its adaptive plan shows both the
-  * `== Final Plan ==` (runtime stage reuse, AQEShuffleRead coalescing,
-  * join-strategy rewrites) and the `== Initial Plan ==`. The session is
-  * the one Verify and Bench run ([[graft.GraftSession]]).
+/** Layer records and executed plans of named slate queries, through
+  * [[graft.util.Telemetry.measure]]. Each query runs twice in the
+  * session Verify and Bench use ([[graft.GraftSession]]); the second,
+  * warm run is recorded. Its executed plan goes to a file: an adaptive
+  * plan shows both the `== Final Plan ==` (runtime stage reuse,
+  * AQEShuffleRead coalescing, join-strategy rewrites) and the
+  * `== Initial Plan ==`. Its record is printed as one JSON line.
   *
   *   sbt "runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...>"
   *
@@ -32,37 +30,24 @@ object PlanDump {
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
     val spark = graft.GraftSession(planConf: _*)
-    // the QueryExecution the noop write actually ran (df.queryExecution
-    // is a different, never-executed one, isFinalPlan=false); a query's
-    // own internal writes are v1 commands and are skipped
-    @volatile var executed: Option[QueryExecution] = None
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        if (qe.logical.isInstanceOf[OverwriteByExpression]) executed = Some(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    })
     Files.createDirectories(Paths.get(outDir))
     val slate = graft.SparkEntry.queries
     names.foreach { name =>
-      executed = None
-      val plan =
+      val file = Paths.get(outDir, s"$name$suffix.txt")
+      def run() =
+        try Telemetry.measure(slate(name)(spark, sfDir))
+        finally graft.dedup.Dedup.releaseCaches()
+      val (plan, fields) =
         try {
-          slate(name)(spark, sfDir).write.format("noop")
-            .mode("overwrite").save()
-          // listener delivery is asynchronous; poll briefly for it
-          var waited = 0
-          while (executed.isEmpty && waited < 5000) {
-            Thread.sleep(100); waited += 100
-          }
-          executed.map(_.explainString(FormattedMode))
-            .getOrElse("PLAN FAILED: no executed plan reported")
-        } catch { case e: Throwable => s"PLAN FAILED: $e" }
-      Files.write(Paths.get(outDir, s"$name$suffix.txt"),
-        plan.getBytes("UTF-8"))
-      println(s"wrote $outDir/$name$suffix.txt (${plan.length} chars)")
-      graft.dedup.Dedup.releaseCaches()
+          run()
+          val r = run()
+          (r.plan, s""""record":${r.json}""")
+        } catch {
+          case e: Throwable =>
+            (s"PLAN FAILED: $e", s""""error":"${e.getClass.getSimpleName}"""")
+        }
+      Files.write(file, plan.getBytes("UTF-8"))
+      println(s"""{"query":"$name","plan_file":"$file",$fields}""")
     }
     spark.stop()
   }

@@ -12,8 +12,9 @@ import graft.util.Telemetry
   * them: deterministically synthesizes a 10–50× corpus from the sf
   * test tables and runs the dedup family, connected components, IVF
   * and the curation chain on it, measuring wall time, shuffle volume
-  * and spill per operator at each scale (Telemetry reads them off the
-  * executed plan's SQLMetrics).
+  * and spill per operator at each scale (the layer record of
+  * [[graft.util.Telemetry.measure]], building the operator's frame
+  * included).
   *
   * What "passing" looks like (written to the report, pasted into
   * SCALING.md):
@@ -140,10 +141,10 @@ object ScaleStress {
 
   /** Runs per op (min wall reported): a single local[32] sample is
     * hostage to GC/compilation pauses — the first published table had
-    * a simhash ×10 sample EXCEED its ×50 one. Plan metrics (shuffle
-    * bytes/records, spill) are deterministic and identical across
-    * runs; only wall time needs the noise damping, and min is the
-    * right statistic for a scaling curve (the noise is additive). */
+    * a simhash ×10 sample EXCEED its ×50 one. Task metrics (shuffle
+    * bytes/records, spill) barely move across runs; only wall time
+    * needs the noise damping, and min is the right statistic for a
+    * scaling curve (the noise is additive). */
   private val runsPerOp =
     sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt.max(1)
 
@@ -223,20 +224,12 @@ object ScaleStress {
   private def measureOp(name: String, m: Int, rowsIn: Long)(
       df: => DataFrame): Measurement = {
     println(s"-- x$m $name ...")
-    val samples = (1 to runsPerOp).map { _ =>
-      // time the CONSTRUCTION too: eager localCheckpoints inside a
-      // chain (curation stages) run while the DataFrame is being
-      // built, before Telemetry's own timer starts
-      val t0 = System.nanoTime()
-      val qm = Telemetry.measure(df)
-      val wallSec = (System.nanoTime() - t0) / 1e9
-      Dedup.releaseCaches()
-      (wallSec, qm)
-    }
-    val (wallSec, qm) = samples.minBy(_._1)
+    val qm = (1 to runsPerOp).map { _ =>
+      try Telemetry.measure(df) finally Dedup.releaseCaches()
+    }.minBy(_.wallS)
     val res = Measurement(m, name, rowsIn, qm.rowsOut,
-      wallSec, qm.shuffleBytesWritten / 1048576.0,
-      qm.shuffleRecordsWritten, qm.spillBytes / 1048576.0, usedHeapMB())
+      qm.wallS, qm.shuffleWriteBytes / 1048576.0,
+      qm.shuffleWriteRecords, qm.spillBytes / 1048576.0, usedHeapMB())
     println(f"-- x$m $name: ${res.rowsOut} rows, ${res.wallSec}%.2f s, " +
       f"${res.shuffleMB}%.1f MB shuffled, ${res.spillMB}%.1f MB spilled")
     res

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.TimestampType
 
 /** Loaders for the driver-provided testdata tables (TESTDATA.md).
   *
@@ -19,29 +20,15 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame      = load(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
-  /** `events.ts` is parquet TIMESTAMP(NANOS). How a Spark build scans
-    * that type varies: older builds reject it unless
-    * `spark.sql.legacy.parquet.nanosAsLong` maps it to a
-    * nanos-since-epoch long; this build reads it natively as
-    * TIMESTAMP_NTZ (micros, nanos floored — the legacy conf is
-    * ignored). Normalize BY OBSERVED SCAN TYPE, not by version sniff,
-    * so every shape lands on the same session-timezone timestamp the
-    * oracles compare against (session tz is UTC everywhere here, so
-    * the NTZ→LTZ cast is instant-preserving). Integer `div` on the
-    * long path — double division would lose precision above 2^53 ns. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
+  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark scans as
+    * TIMESTAMP_NTZ (micros, nanos floored). */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    withEventTs(load(spark, dir, "events"))
+  /** `ts` cast to the session-timezone timestamp the oracles compare
+    * against; the session time zone is UTC everywhere here, so the
+    * NTZ→LTZ cast keeps the instant. */
+  def withEventTs(raw: DataFrame): DataFrame =
+    raw.withColumn("ts", raw("ts").cast(TimestampType))
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 }

@@ -1,88 +1,188 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import scala.collection.mutable
 
-/** Per-query execution telemetry: the numbers an operator watches at
-  * 100 TB — how much was scanned, how much crossed the shuffle, how
-  * many rows came out — pulled from the executed plan's SQLMetrics
-  * after an action. No listener wiring, no UI scraping: run, then read
-  * the metrics off the final (AQE) plan.
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+
+/** Per-query layer record: where one query's time and bytes went.
+  * [[measure]] times building the DataFrame (eager jobs the builder
+  * starts included), Catalyst planning and execution on the frame's own
+  * `QueryExecution`, with a `SparkListener` registered around the call
+  * for the jobs, stages, tasks and task metrics. Shuffle, spill, CPU and
+  * task counts cover the whole measured window (build and execution);
+  * `jobs` counts execution jobs only, `buildJobs` the ones before it.
   */
 object Telemetry {
 
-  final case class QueryMetrics(
-      durationMs: Long,
-      rowsOut: Long,
-      shuffleBytesWritten: Long,
-      shuffleRecordsWritten: Long,
-      scanOutputRows: Long,
-      filesRead: Long,
-      spillBytes: Long = 0L) {
-    /** The question that decides "will this survive a 100× scale-up":
-      * how many bytes move per output row. */
+  /** One Spark job of a measured query. `startS` is seconds from the
+    * start of the measurement; `gapS` is the driver time before the job
+    * that no earlier job of the query covers. */
+  final case class Job(id: Int, build: Boolean, startS: Double,
+      durS: Double, gapS: Double, stages: Int, tasks: Int, site: String)
+
+  final case class Record(
+      buildS: Double, planS: Double, execS: Double,
+      /** execution time that no job covers: driver-side work */
+      gapS: Double,
+      buildJobs: Int, jobs: Int, stages: Int, tasks: Int,
+      taskRunS: Double, taskCpuS: Double,
+      shuffleWriteBytes: Long, shuffleWriteRecords: Long,
+      shuffleReadBytes: Long, spillBytes: Long,
+      rowsOut: Long, reusedExchanges: Int,
+      jobList: Seq[Job],
+      /** the executed (final, when adaptive) plan, formatted */
+      plan: String) {
+    def wallS: Double = buildS + planS + execS
+
+    /** How many bytes move per output row: the number that decides
+      * whether a query survives a 100× scale-up. */
     def shuffleBytesPerOutputRow: Double =
-      if (rowsOut == 0) 0.0 else shuffleBytesWritten.toDouble / rowsOut
-  }
+      if (rowsOut == 0) 0.0 else shuffleWriteBytes.toDouble / rowsOut
 
-  /** Unwrap AQE so metric collection sees the final physical plan. */
-  private def finalPlan(p: SparkPlan): SparkPlan = p match {
-    case a: AdaptiveSparkPlanExec => a.executedPlan
-    case other => other
-  }
-
-  private def sumMetric(plan: SparkPlan, names: Set[String],
-      nodeFilter: String => Boolean): Long = {
-    var total = 0L
-    def walk(p: SparkPlan): Unit = {
-      // ReusedExchange aliases the ORIGINAL exchange's SQLMetrics —
-      // counting it double-counts shuffle bytes whenever AQE reuses an
-      // exchange (self-joins, cube/pivot). It is a leaf (the reused
-      // subtree is not among its children), so skipping collection
-      // here drops nothing else.
-      if (p.nodeName.startsWith("ReusedExchange")) return
-      if (nodeFilter(p.nodeName))
-        p.metrics.foreach { case (k, m) =>
-          if (names.contains(k) && m.value > 0) total += m.value
-        }
-      p match {
-        // AQE materializes stages behind QueryStageExec, whose
-        // `children` is empty — the real subtree hangs off `.plan`
-        case q: QueryStageExec => walk(q.plan)
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case _ => p.children.foreach(walk)
-      }
-      p.subqueries.foreach(walk)
+    /** The record as one JSON object, without the plan text. */
+    def json: String = {
+      def obj(kv: (String, Any)*) =
+        kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+      def num(d: Double) = f"$d%.3f"
+      obj("build_s" -> num(buildS), "plan_s" -> num(planS),
+        "exec_s" -> num(execS), "gap_s" -> num(gapS),
+        "build_jobs" -> buildJobs, "jobs" -> jobs, "stages" -> stages,
+        "tasks" -> tasks, "task_run_s" -> num(taskRunS),
+        "task_cpu_s" -> num(taskCpuS),
+        "shuffle_write_bytes" -> shuffleWriteBytes,
+        "shuffle_write_records" -> shuffleWriteRecords,
+        "shuffle_read_bytes" -> shuffleReadBytes,
+        "spill_bytes" -> spillBytes, "rows_out" -> rowsOut,
+        "reused_exchanges" -> reusedExchanges,
+        "job_list" -> jobList.map(j => obj("id" -> j.id,
+          "build" -> j.build, "start_s" -> num(j.startS),
+          "dur_s" -> num(j.durS), "gap_s" -> num(j.gapS),
+          "stages" -> j.stages, "tasks" -> j.tasks,
+          "site" -> quote(j.site))).mkString("[", ",", "]"))
     }
-    walk(finalPlan(plan))
-    total
   }
 
-  /** Execute `df` and read back the plan's metrics. The action runs on
-    * df's OWN QueryExecution (`toRdd.count()` — no driver collect, no
-    * separate count plan), so the metrics we read belong to the plan
-    * that actually ran. */
-  def measure(df: DataFrame): QueryMetrics = {
-    val qe = df.queryExecution
-    val t0 = System.nanoTime()
-    val rows = qe.toRdd.count()
-    val durMs = (System.nanoTime() - t0) / 1000000
-    val plan = qe.executedPlan
-    QueryMetrics(
-      durationMs = durMs,
-      rowsOut = rows,
-      shuffleBytesWritten = sumMetric(plan, Set("shuffleBytesWritten"),
-        _.contains("Exchange")),
-      shuffleRecordsWritten = sumMetric(plan,
-        Set("shuffleRecordsWritten"), _.contains("Exchange")),
-      scanOutputRows = sumMetric(plan, Set("numOutputRows"),
-        _.startsWith("Scan")),
-      filesRead = sumMetric(plan, Set("numFiles"),
-        _.startsWith("Scan")),
-      // sort/aggregate/shuffle-read spill ("spill size" SQLMetrics) —
-      // nonzero means the partition sizing no longer fits executor
-      // memory, the first thing that goes wrong on a scale-up
-      spillBytes = sumMetric(plan, Set("spillSize"), _ => true))
+  private def quote(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
+  /** Jobs, stages and task metrics as the listener bus delivers them.
+    * Tasks count only for stages of a job seen starting here, so events
+    * of jobs begun before the measurement are ignored. */
+  private final class Recorder extends SparkListener {
+    final class J(val start: SparkListenerJobStart) {
+      var end = -1L
+      var stages, tasks = 0
+    }
+    val jobs = mutable.ArrayBuffer.empty[J]
+    val stageJob = mutable.Map.empty[Int, J]
+    var runMs, cpuNs, shufW, shufWRec, shufR, spill = 0L
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val j = new J(e)
+      jobs += j
+      e.stageIds.foreach(s => if (!stageJob.contains(s)) stageJob(s) = j)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.find(_.start.jobId == e.jobId).foreach(_.end = e.time)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        stageJob.get(e.stageInfo.stageId).foreach(_.stages += 1)
+      }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      stageJob.get(e.stageId).foreach { j =>
+        j.tasks += 1
+        Option(e.taskMetrics).foreach { m =>
+          runMs += m.executorRunTime
+          cpuNs += m.executorCpuTime
+          shufW += m.shuffleWriteMetrics.bytesWritten
+          shufWRec += m.shuffleWriteMetrics.recordsWritten
+          shufR += m.shuffleReadMetrics.totalBytesRead
+          spill += m.diskBytesSpilled
+        }
+      }
+    }
+  }
+
+  /** ReusedExchange nodes in the executed plan, through adaptive stages
+    * and subqueries. Both ReusedExchange and ReusedSubquery are leaves,
+    * so nothing reused is walked twice. */
+  private def reusedExchanges(p: SparkPlan): Int = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    (if (p.isInstanceOf[ReusedExchangeExec]) 1 else 0) +
+      (kids ++ p.subqueries).map(reusedExchanges).sum
+  }
+
+  /** Build the frame, plan it and execute it on its OWN QueryExecution
+    * (`toRdd.count()`: no driver collect, no separate count plan), then
+    * drain the listener bus and return the record. The session must
+    * be active before the call: the listener is registered on it before
+    * `build` runs. */
+  def measure(build: => DataFrame): Record = {
+    val spark = SparkSession.active
+    // earlier queries' events must not reach this query's recorder
+    GraftSqlShims.waitForListeners(spark)
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
+    try {
+      val t0Ms = System.currentTimeMillis
+      val t0 = System.nanoTime()
+      val qe = build.queryExecution
+      val t1 = System.nanoTime()
+      qe.executedPlan
+      val t2 = System.nanoTime()
+      val execMs = System.currentTimeMillis
+      val rows = qe.toRdd.count()
+      val t3 = System.nanoTime()
+      val endMs = System.currentTimeMillis
+      GraftSqlShims.waitForListeners(spark)
+      rec.synchronized {
+        // walk the jobs in start order: the gap before each job, and the
+        // union of the execution jobs' intervals within execution
+        var lastEnd = t0Ms
+        var covered = 0L
+        val jobList = rec.jobs.sortBy(_.start.time).toSeq.map { j =>
+          val start = j.start.time
+          val end = if (j.end >= start) j.end else endMs
+          val inBuild = start < execMs
+          if (!inBuild)
+            covered += math.max(0L,
+              math.min(end, endMs) - math.max(start, lastEnd))
+          val gap = math.max(0L, start - lastEnd)
+          lastEnd = math.max(lastEnd, end)
+          val site = Option(j.start.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .orElse(j.start.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+            .getOrElse("")
+          Job(j.start.jobId, inBuild, (start - t0Ms) / 1e3,
+            (end - start) / 1e3, gap / 1e3, j.stages, j.tasks, site)
+        }
+        val execS = (t3 - t2) / 1e9
+        Record(
+          buildS = (t1 - t0) / 1e9, planS = (t2 - t1) / 1e9, execS = execS,
+          gapS = math.min(execS, math.max(0.0, execS - covered / 1e3)),
+          buildJobs = jobList.count(_.build),
+          jobs = jobList.count(!_.build),
+          stages = jobList.map(_.stages).sum,
+          tasks = jobList.map(_.tasks).sum,
+          taskRunS = rec.runMs / 1e3, taskCpuS = rec.cpuNs / 1e9,
+          shuffleWriteBytes = rec.shufW, shuffleWriteRecords = rec.shufWRec,
+          shuffleReadBytes = rec.shufR, spillBytes = rec.spill,
+          rowsOut = rows, reusedExchanges = reusedExchanges(qe.executedPlan),
+          jobList = jobList, plan = qe.explainString(FormattedMode))
+      }
+    } finally spark.sparkContext.removeSparkListener(rec)
   }
 }

@@ -11,6 +11,10 @@ object GraftSqlShims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Block until every event posted so far reached every listener. */
+  def waitForListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** The EXACT coercion Spark applies to the two sides of an equality
     * comparison (and therefore to mismatched equi-join keys). Not the
     * same as findWiderTypeForTwo: e.g. string-vs-bigint compares as

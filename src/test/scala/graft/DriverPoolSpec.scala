@@ -5,6 +5,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlShims
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.DriverPool
@@ -85,11 +86,7 @@ class DriverPoolSpec extends AnyFunSuite {
       assert(after.asScala.forall(_.exists(_.contains("poolCaller"))))
       assert(sc.getLocalProperty("callSite.long") == null,
         "the calling thread's call site was touched")
-      sc.setLocalProperty(marker, "sentinel")
-      spark.range(1).count()
-      val deadline = System.currentTimeMillis + 10000
-      while (!sites.asScala.exists(_._1 == "sentinel") &&
-        System.currentTimeMillis < deadline) Thread.sleep(20)
+      GraftSqlShims.waitForListeners(spark)
       val pooled = sites.asScala.collect { case ("pool", d) => d }.toSeq
       assert(pooled.size >= 2)
       pooled.foreach { d =>

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -72,13 +72,10 @@ class ParallelismSpec extends AnyFunSuite {
       Parallelism.spread(df, "id")
       Parallelism.spread(many, "id")
       Parallelism.spread(grouped, "id")
-      // listener events arrive in order: once the sentinel job is seen,
-      // every job the probes started has been seen too
+      // a marked job the listener must see: the drain delivered it
       sc.setLocalProperty(marker, "sentinel")
       spark.range(1).count()
-      val deadline = System.currentTimeMillis + 10000
-      while (!jobs.contains("sentinel") &&
-        System.currentTimeMillis < deadline) Thread.sleep(20)
+      GraftSqlShims.waitForListeners(spark)
       assert(jobs.contains("sentinel"))
       assert(jobs.asScala.count(_ == "probe") == 0)
     } finally {
