@@ -54,7 +54,7 @@ object Bench {
     // shuffle machinery) so the first timed query isn't charged ~3 s of
     // one-time JVM setup
     spark.range(1000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/nation.parquet").count()
+    try graft.util.Tables.nation(spark, sfDir).count()
     catch { case _: Throwable => () }
     val slate = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }

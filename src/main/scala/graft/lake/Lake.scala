@@ -5,7 +5,7 @@ import scala.util.chaining._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
-import graft.util.Checkpointing
+import graft.util.{Checkpointing, Tables}
 
 /** Medallion-lake write layer: landing-zone raw writes plus the silver
   * layer's partitioned append-or-create tables.
@@ -211,7 +211,7 @@ object Lake {
       s"/_staging_rename_${table.replace('.', '_')}"
     renamed.write.mode("overwrite").format("parquet")
       .partitionBy(partitionCol).save(stagePath)
-    val staged = spark.read.parquet(stagePath)
+    val staged = Tables.parquet(spark, stagePath)
     spark.sql(s"DROP TABLE $table")
     staged.write.format("parquet").partitionBy(partitionCol)
       .saveAsTable(table)

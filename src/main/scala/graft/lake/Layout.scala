@@ -3,6 +3,8 @@ package graft.lake
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Tables
+
 /** Physical-layout operators for the lake: Z-order clustering for
   * multi-column data skipping, and small-file compaction.
   *
@@ -69,9 +71,9 @@ object Layout {
     * callers can assert no loss. */
   def compact(spark: org.apache.spark.sql.SparkSession, inPath: String,
       outPath: String, numFiles: Int): Long = {
-    val df = spark.read.parquet(inPath)
+    val df = Tables.parquet(spark, inPath)
     df.repartition(numFiles).write.mode("overwrite").parquet(outPath)
-    spark.read.parquet(outPath).count()
+    Tables.parquet(spark, outPath).count()
   }
 
   // ---------------------------------------------- file-stats skipping
@@ -92,7 +94,7 @@ object Layout {
     val aggs = cols.flatMap(c => Seq(
       min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
       count(lit(1)).as("rows")
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -131,9 +133,8 @@ object Layout {
     val files = candidateFiles(manifest, c, lo, hi)
     val base =
       if (files.isEmpty)
-        spark.read.schema(spark.read.parquet(path).schema)
-          .parquet(path).limit(0)
-      else spark.read.parquet(files: _*)
+        Tables.parquet(spark, path).limit(0)
+      else Tables.parquet(spark, files: _*)
     base.filter(col(c) >= lo && col(c) <= hi)
   }
 
@@ -182,7 +183,7 @@ object Layout {
     if (cand.count() <= maxDriverFiles)
       prunedRead(spark, path, manifest, c, lo, hi, verifyFresh = false)
     else {
-      val base = spark.read.parquet(path)
+      val base = Tables.parquet(spark, path)
         .withColumn("__bf",
           regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1))
         .filter(col(c) >= lo && col(c) <= hi)

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Tables
+
 /** Snapshot-versioned parquet tables: the slice of Iceberg v2 the
   * reference chose Iceberg FOR, re-built on plain parquet + a JSON
   * manifest (the reference relies on Glue/Iceberg for schema evolution
@@ -204,8 +206,8 @@ object Snapshots {
     df.write.mode("overwrite").parquet(s"$root/$dataDir")
     // delete keys come from the LANDED batch (not the live plan):
     // one source of truth for what was written
-    spark.read.parquet(s"$root/$dataDir").select(col(keyCol)).distinct()
-      .write.mode("overwrite").parquet(s"$root/$delDir")
+    Tables.parquet(spark, s"$root/$dataDir").select(col(keyCol))
+      .distinct().write.mode("overwrite").parquet(s"$root/$delDir")
     val snap = Snapshot(v, "upsert", System.currentTimeMillis(),
       prev.dataDirs :+ dataDir, prev.deleteDirs :+ delDir)
     commit(root, snap)
@@ -331,7 +333,7 @@ object Snapshots {
     // order). Unions are narrow — a single-dir snapshot is literally
     // one scan, a multi-dir history is one stage of parallel scans.
     if (snap.deleteDirs.isEmpty)
-      return snap.dataDirs.map(d => spark.read.parquet(s"$root/$d"))
+      return snap.dataDirs.map(d => Tables.parquet(spark, s"$root/$d"))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     // Iceberg v2 sequencing: an equality-delete file applies ONLY to
     // data files committed before it (smaller sequence number) — a key
@@ -344,7 +346,7 @@ object Snapshots {
     // the old mergeSchema role: an append may carry NEW columns
     // (Iceberg add-column); older files surface them as nulls.
     val base = snap.dataDirs.map { d =>
-      val df = spark.read.parquet(s"$root/$d")
+      val df = Tables.parquet(spark, s"$root/$d")
       // fail loudly rather than silently replacing-then-dropping a
       // user column that collides with the internal sequence marker
       require(!df.columns.contains("__seq"),
@@ -353,7 +355,7 @@ object Snapshots {
       df.withColumn("__seq", lit(dirSeq(d)))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val delFrames = snap.deleteDirs.map { d =>
-      val df = spark.read.parquet(s"$root/$d")
+      val df = Tables.parquet(spark, s"$root/$d")
       (df.columns.head,
         df.select(col(df.columns.head).as("__delkey"),
           lit(dirSeq(d)).as("__dseq")))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.dq.{DqRule, DqVerdict, Dqdl, NotNull, Ruleset, UniqueKey}
 import graft.lake.Lake
-import graft.util.DriverPool
+import graft.util.{DriverPool, Tables}
 
 /** Declarative SQL-file modeling layer — the dbt analog. The
   * reference's serving layer is *authored* as SQL files plus YAML
@@ -521,7 +521,7 @@ object ModelRunner {
             try {
               merged.write.mode("overwrite").parquet(stage.toString)
               Lake.materializeTable(spark,
-                spark.read.parquet(stage.toString), relation)
+                Tables.parquet(spark, stage.toString), relation)
             } finally fs.delete(stage, true)
           }
       }

@@ -125,31 +125,51 @@ object EditJoin {
       .filter(col("__s").isNotNull)
       .dropDuplicates("__id", "__s")
 
-  /** Strip the corpus-global longest common prefix across ALL given
-    * frames (distance preservation needs the same prefix removed from
-    * each side). LCP via min/max: every string shares LCP(min, max)
-    * (strings sort lexicographically, so anything between the two
-    * extremes starts with their common prefix). Two strings reach the
-    * driver — bounded like the IVF centroid pulls. (Construction
-    * therefore runs small driver jobs, like bloomPrune's filter
-    * build — the literals must exist before the plan does.) The LCP
-    * is counted in CODE POINTS, not UTF-16 units: Spark's substring
-    * (and levenshtein) walk code points, so a char-unit count would
-    * split supplementary-plane characters and corrupt distances. */
-  private def stripLcp(dfs: Seq[DataFrame]): Seq[DataFrame] = {
-    val r = dfs.map(_.select(col("__s"))).reduce(_ unionAll _)
-      .agg(min("__s"), max("__s")).head()
-    val lcpLen =
-      if (r.isNullAt(0)) 0
+  /** What constructing a join must know about the corpus before the
+    * plan can exist, pulled in ONE aggregate over the prepped frames
+    * (the first is the build side): the corpus-global longest common
+    * prefix length `lcp` (0 without `strip`) and the build side's
+    * distinct post-strip lengths that reach the pigeonhole path
+    * (`L − lcp ≥ k + 1`), or None when none do or more than 64 do.
+    *
+    * LCP via min/max: every string shares LCP(min, max) (strings sort
+    * lexicographically, so anything between the two extremes starts
+    * with their common prefix), and distance preservation needs the
+    * same prefix removed from every side. Two strings and a set of
+    * lengths (bounded by the longest string) are collected, like the
+    * IVF centroid pulls; construction therefore starts this one small
+    * query, as bloomPrune's filter build does — the literals must exist
+    * before the plan does. Both the LCP and the lengths count CODE
+    * POINTS, not UTF-16 units: Spark's substring, length and
+    * levenshtein walk code points, so a char-unit count would split
+    * supplementary-plane characters and corrupt distances. */
+  private[graft] final case class Profile(lcp: Int,
+      buildLens: Option[Seq[Int]])
+
+  private[graft] def profile(dfs: Seq[DataFrame], k: Int,
+      strip: Boolean): Profile = {
+    val r = dfs.zipWithIndex
+      .map { case (df, i) => df.select(col("__s"), lit(i == 0).as("__b")) }
+      .reduce(_ unionAll _)
+      .agg(min("__s"), max("__s"),
+        collect_set(when(col("__b"), length(col("__s")))))
+      .head()
+    val lcp =
+      if (!strip || r.isNullAt(0)) 0
       else {
         val (a, b) = (r.getString(0).codePoints().toArray,
           r.getString(1).codePoints().toArray)
         a.zip(b).takeWhile(t => t._1 == t._2).length
       }
-    if (lcpLen == 0) dfs
-    else dfs.map(_.select(col("__id"),
-      substring(col("__s"), lcpLen + 1, Int.MaxValue).as("__s")))
+    val lens = r.getSeq[Int](2).map(_ - lcp).filter(_ >= k + 1)
+    Profile(lcp, Option.when(lens.nonEmpty && lens.length <= 64)(lens))
   }
+
+  /** Drop the profiled common prefix from a prepped frame. */
+  private def stripPrefix(df: DataFrame, p: Profile): DataFrame =
+    if (p.lcp == 0) df
+    else df.select(col("__id"),
+      substring(col("__s"), p.lcp + 1, Int.MaxValue).as("__s"))
 
   private def withLenOf(df: DataFrame): DataFrame =
     df.select(col("__id"), col("__s"), length(col("__s")).as("__l"))
@@ -181,21 +201,12 @@ object EditJoin {
     * Invalid windows null out and filter away; array_distinct
     * collapses windows that repeat the same key. Assumed lengths that
     * exist on NO build string can never match — when the build corpus
-    * has few distinct lengths (one tiny distinct agg, pulled only if
-    * it fits 64 values — fixed-format corpora typically have exactly
-    * one), they embed as an IN-list and prune probe fan-out by
+    * has few distinct lengths (the profile's `buildLens`, present only
+    * if they fit 64 values — fixed-format corpora typically have
+    * exactly one), they embed as an IN-list and prune probe fan-out by
     * ~(2k+1)× before the shuffle. */
-  private def probeFrame(probeSide: DataFrame, buildLens: DataFrame,
-      k: Int): DataFrame = {
-    // assumed lengths that exist on NO build string can never match:
-    // the tiny distinct agg embeds them into the generator's skip set
-    // when they fit the 64-value pull (fixed-format corpora typically
-    // have exactly one), pruning probe fan-out ~(2k+1)× at the source
-    val lens = {
-      val ls = buildLens.select(col("__l")).distinct().limit(65)
-        .collect().map(_.getInt(0))
-      if (ls.length <= 64 && ls.nonEmpty) Some(ls.toSeq) else None
-    }
+  private def probeFrame(probeSide: DataFrame,
+      buildLens: Option[Seq[Int]], k: Int): DataFrame =
     // one fused generator (graft.functions.EditProbeSegments) emits
     // the distinct (i, l1, seg) windows in a single compiled pass per
     // row — semantically identical to the former five-level
@@ -205,11 +216,10 @@ object EditJoin {
     probeSide
       .select(col("__id"), col("__s").as("__sb"),
         graft.functions.EditProbeSegments
-          .edit_probe_segments(col("__s"), k, lens))
+          .edit_probe_segments(col("__s"), k, buildLens))
       .withColumnRenamed("i", "__i")
       .withColumnRenamed("l1", "__l1")
       .withColumnRenamed("seg", "__seg")
-  }
 
   /** EXACT candidate-join cardinality from per-key counts (the
     * [[graft.operators.Joins.joinCardinality]] pattern on the
@@ -275,10 +285,11 @@ object EditJoin {
     require(maxDist >= 1, "maxDist must be >= 1")
     val k = maxDist
     val base0 = prep(df, idCol, strCol)
-    val base = if (stripCommonPrefix) stripLcp(Seq(base0)).head else base0
-    val longSide = withLenOf(base).filter(col("__l") >= k + 1)
+    val p = profile(Seq(base0), k, stripCommonPrefix)
+    val longSide =
+      withLenOf(stripPrefix(base0, p)).filter(col("__l") >= k + 1)
     candidateCardinality(buildFrame(longSide, k),
-      probeFrame(longSide, longSide, k))
+      probeFrame(longSide, p.buildLens, k))
   }
 
   /** Cross-table variant of [[estimatePairs]] — the pre-flight for
@@ -291,12 +302,11 @@ object EditJoin {
     val k = maxDist
     val l0 = prep(left, leftIdCol, leftStrCol)
     val r0 = prep(right, rightIdCol, rightStrCol)
-    val (lBase, rBase) = if (stripCommonPrefix) {
-      val s = stripLcp(Seq(l0, r0)); (s(0), s(1))
-    } else (l0, r0)
-    val lLong = withLenOf(lBase).filter(col("__l") >= k + 1)
-    val rLong = withLenOf(rBase).filter(col("__l") >= k + 1)
-    candidateCardinality(buildFrame(lLong, k), probeFrame(rLong, lLong, k))
+    val p = profile(Seq(l0, r0), k, stripCommonPrefix)
+    val lLong = withLenOf(stripPrefix(l0, p)).filter(col("__l") >= k + 1)
+    val rLong = withLenOf(stripPrefix(r0, p)).filter(col("__l") >= k + 1)
+    candidateCardinality(buildFrame(lLong, k),
+      probeFrame(rLong, p.buildLens, k))
   }
 
   /** All unordered pairs within `maxDist` edits: `(id_a, id_b, dist)`
@@ -321,7 +331,8 @@ object EditJoin {
     val n = k + 1 // segments per string
 
     val base0 = prep(df, idCol, strCol)
-    val base = if (stripCommonPrefix) stripLcp(Seq(base0)).head else base0
+    val p = profile(Seq(base0), k, stripCommonPrefix)
+    val base = stripPrefix(base0, p)
 
     val withLen = withLenOf(base)
     val longSide = withLen.filter(col("__l") >= n)
@@ -340,7 +351,7 @@ object EditJoin {
     // selfJoin unconditionally exact.
     if (rerouteAbove.isDefined || maxPairs.isDefined) {
       val est: Row = candidateCardinality(buildFrame(longSide, k),
-        probeFrame(longSide, longSide, k)).head()
+        probeFrame(longSide, p.buildLens, k)).head()
       if (rerouteAbove.exists(est.getLong(0) > _))
         return minHashSelfJoin(df, idCol, strCol, maxDist,
           stripCommonPrefix)
@@ -348,7 +359,7 @@ object EditJoin {
     }
 
     val build = buildFrame(longSide, k)
-    val probe = probeFrame(longSide, longSide, k)
+    val probe = probeFrame(longSide, p.buildLens, k)
 
     // candidate equi-join on (segIdx, length, segment), ONE orientation
     // only (buildId < probeId — the pigeonhole holds both ways, so the
@@ -467,7 +478,9 @@ object EditJoin {
       maxBucketSize: Int = 200, starReps: Int = 1): DataFrame = {
     require(maxDist >= 1, "maxDist must be >= 1")
     val base0 = prep(df, idCol, strCol)
-    val base = if (stripCommonPrefix) stripLcp(Seq(base0)).head else base0
+    val base =
+      if (!stripCommonPrefix) base0
+      else stripPrefix(base0, profile(Seq(base0), maxDist, strip = true))
     val cand = graft.dedup.Dedup.minHashCandidates(
       base, "__id", "__s", shingleSize, k, bands, maxBucketSize,
       starReps)
@@ -514,22 +527,20 @@ object EditJoin {
     val l0 = prep(left, leftIdCol, leftStrCol)
     val r0 = prep(right, rightIdCol, rightStrCol)
 
-    val (lBase, rBase) = if (stripCommonPrefix) {
-      val s = stripLcp(Seq(l0, r0)); (s(0), s(1))
-    } else (l0, r0)
+    val p = profile(Seq(l0, r0), k, stripCommonPrefix)
 
-    val lLen = withLenOf(lBase)
-    val rLen = withLenOf(rBase)
+    val lLen = withLenOf(stripPrefix(l0, p))
+    val rLen = withLenOf(stripPrefix(r0, p))
     val lLong = lLen.filter(col("__l") >= n)
     val rLong = rLen.filter(col("__l") >= n)
 
     enforceMaxPairs("join",
       candidateCardinality(buildFrame(lLong, k),
-        probeFrame(rLong, lLong, k)).head(),
+        probeFrame(rLong, p.buildLens, k)).head(),
       maxPairs)
 
     val build = buildFrame(lLong, k)
-    val probe = probeFrame(rLong, lLong, k)
+    val probe = probeFrame(rLong, p.buildLens, k)
 
     // first-match candidate dedup, as in selfJoin: emit each
     // (left, right) pair only for the lowest matching segment index —

@@ -9,6 +9,7 @@ import graft.dedup.Dedup
 import graft.dq.{Dqdl, IsComplete, RowCount, Ruleset, UniqueKey}
 import graft.operators.Sampling
 import graft.text.TextAnalysis
+import graft.util.Tables
 
 /** End-to-end training-data curation as a [[Pipeline]] DAG — the
   * north-star operators (quality scoring, PII redaction, opt-in
@@ -118,7 +119,7 @@ object Curation {
       implicit ec: ExecutionContext): Pipeline = {
 
     def stagePath(s: String) = s"${cfg.workDir}/$s"
-    def read(s: String): DataFrame = spark.read.parquet(stagePath(s))
+    def read(s: String): DataFrame = Tables.parquet(spark, stagePath(s))
     def write(df: DataFrame, s: String): StageOutcome = {
       df.write.mode("overwrite").parquet(stagePath(s)); StageOk
     }
@@ -203,7 +204,7 @@ object Curation {
 
     val stages = Seq(
       Stage("clean")(_ => write(
-        spark.read.parquet(cfg.inPath)
+        Tables.parquet(spark, cfg.inPath)
           .withColumn("text", TextAnalysis.redactPii(col("text")))
           .filter(TextAnalysis.qualityScore(col("text")) >= cfg.minQuality),
         "clean"))) ++
@@ -241,7 +242,7 @@ object Curation {
       },
       Stage("decontaminate", Seq("near_dedup"))(_ => writeWithStats(
         Dedup.decontaminate(read("near_dedup"),
-          spark.read.parquet(cfg.benchPath), "doc_id", "text"),
+          Tables.parquet(spark, cfg.benchPath), "doc_id", "text"),
         "decontaminate")),
       // The gate's RowCount / IsComplete rules are answered from the
       // write-observed stats row — same verdicts, no re-scan of the
@@ -250,7 +251,7 @@ object Curation {
       // skinny scan) through the same Dqdl evaluator as before. Rule
       // names in the failure report are unchanged.
       Stage("dq_gate", Seq("decontaminate")) { _ =>
-        val st = spark.read.parquet(stagePath("stats/decontaminate"))
+        val st = read("stats/decontaminate")
           .head()
         val statRules = Map(
           "row_count_gt_0" -> (st.getAs[Long]("row_count") > 0L),
@@ -276,5 +277,5 @@ object Curation {
 
   /** The final curated output (after a successful run). */
   def result(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(s"${cfg.workDir}/split")
+    Tables.parquet(spark, s"${cfg.workDir}/split")
 }

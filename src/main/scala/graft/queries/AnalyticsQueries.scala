@@ -44,12 +44,12 @@ object AnalyticsQueries {
           col("l_extendedprice").cast(DecimalType(18, 2)).as("price"),
           col("l_orderkey").cast("long").as("okey"))
         .write.mode("overwrite").parquet(bp)
-      val base = s.read.parquet(bp)
+      val base = Tables.parquet(s, bp)
       graft.plans.SummaryCatalog.buildSummary(base,
           Seq("l_returnflag", "l_linestatus"), Seq("qty", "price"),
           sketchMeasures = Seq("okey"))
         .write.mode("overwrite").parquet(sp)
-      graft.plans.SummaryCatalog.register(base, s.read.parquet(sp),
+      graft.plans.SummaryCatalog.register(base, Tables.parquet(s, sp),
         Seq("l_returnflag", "l_linestatus"), Seq("qty", "price"),
         sketchMeasures = Seq("okey"))
       bp
@@ -396,7 +396,7 @@ object AnalyticsQueries {
     QueryDef("q_summary_rewrite",
       (s, d) => {
         // key-only filter + key-subset grouping: the rewritable shape
-        s.read.parquet(summaryBase(s, d))
+        Tables.parquet(s, summaryBase(s, d))
           .filter(col("l_linestatus") === "F")
           .groupBy("l_returnflag")
           .agg(sum("qty").as("sq"), min("qty").as("mq"),
@@ -427,7 +427,7 @@ object AnalyticsQueries {
     // value-exact, not just plausible.
     QueryDef("q_summary_distinct",
       (s, d) => {
-        s.read.parquet(summaryBase(s, d))
+        Tables.parquet(s, summaryBase(s, d))
           .groupBy("l_returnflag")
           .agg(countDistinct("l_linestatus").as("n_status"),
             count(col("l_linestatus")).as("n_rows"),
@@ -458,7 +458,7 @@ object AnalyticsQueries {
     // in the sketch's exact coupon range anyway.
     QueryDef("q_summary_sketch",
       (s, d) => {
-        val base = s.read.parquet(summaryBase(s, d))
+        val base = Tables.parquet(s, summaryBase(s, d))
         val est = base.groupBy(col("l_returnflag"))
           .agg(hll_sketch_estimate(
             hll_sketch_agg(col("okey"), 12)).as("est"))

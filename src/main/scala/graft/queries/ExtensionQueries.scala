@@ -74,7 +74,7 @@ object ExtensionQueries {
     // selecting just the events table
     Tables.withEventTs(s.readStream
       .option("pathGlobFilter", "events.parquet")
-      .schema(Tables.load(s, d, "events").schema)
+      .schema(Tables.parquetSchema(s, s"$d/events.parquet"))
       .parquet(d))
 
   /** Snapshot scratch tables built by q_snapshot_read/_merge, one per
@@ -693,8 +693,8 @@ object ExtensionQueries {
           root
         })
         Dedup.incrementalMinHashPairs(
-          Dedup.MinHashIndex(s.read.parquet(s"$idx/sh"),
-            s.read.parquet(s"$idx/bd")),
+          Dedup.MinHashIndex(Tables.parquet(s, s"$idx/sh"),
+            Tables.parquet(s, s"$idx/bd")),
           docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
           threshold = 0.3)
       },
@@ -1020,15 +1020,15 @@ object ExtensionQueries {
             col("embedding").cast("array<double>").as("v"))
             .withColumn("cell", Ivf.assignCell(col("v"), model))
           inv.write.mode("overwrite").parquet(s"$r/inv")
-          s.read.parquet(s"$r/inv").groupBy(col("cell")).count()
+          Tables.parquet(s, s"$r/inv").groupBy(col("cell")).count()
             .write.mode("overwrite").parquet(s"$r/counts")
           r
         })
         val appended = Ivf.appendToIndex(
-          s.read.parquet(s"$root/inv"),
+          Tables.parquet(s, s"$root/inv"),
           emb.filter(col("vec_id") % 5 === 0), "vec_id", "embedding",
           model,
-          baseCellCounts = Some(s.read.parquet(s"$root/counts")))
+          baseCellCounts = Some(Tables.parquet(s, s"$root/counts")))
         Ivf.searchIndex(appended.index,
           emb.filter(col("vec_id") % 5 === 0 && col("vec_id") < 25),
           "vec_id", "embedding", model,
@@ -1187,7 +1187,7 @@ object ExtensionQueries {
             s"$root/out", s"$root/ckpt")
           s"$root/out"
         })
-        s.read.parquet(out)
+        Tables.parquet(s, out)
       },
       Some("""WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts,
              |  user_id, event_type FROM events)
@@ -1237,7 +1237,7 @@ object ExtensionQueries {
           }
           s"$root/out"
         })
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_admitted"))
       },
@@ -1266,7 +1266,7 @@ object ExtensionQueries {
             s"$root/out", s"$root/ckpt")
           s"$root/out"
         })
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"))
       },
@@ -1305,7 +1305,7 @@ object ExtensionQueries {
             agg, s, s"$root/out")
           s"$root/out"
         })
-        s.read.parquet(out)
+        Tables.parquet(s, out)
       },
       Some("""WITH h AS (SELECT source,
              |    CAST(concat('0x', substr(md5(text), 1, 12)) AS BIGINT)
@@ -1354,7 +1354,7 @@ object ExtensionQueries {
             agg, s, s"$root/out")
           s"$root/out"
         })
-        s.read.parquet(out).select(col("source"),
+        Tables.parquet(s, out).select(col("source"),
           size(col("sk")).cast("long").as("sample_n"),
           kmv_sample_quantile(col("sk"), 0.5).as("p50"),
           kmv_sample_quantile(col("sk"), 0.9).as("p90"))

@@ -47,7 +47,7 @@ object Ivf {
 
     def load(spark: org.apache.spark.sql.SparkSession,
         path: String): IvfModel = {
-      val rows = spark.read.parquet(path)
+      val rows = graft.util.Tables.parquet(spark, path)
         .select(col("cell"), col("centroid").cast("array<double>"))
         .collect()
       require(rows.nonEmpty, s"no centroids at $path")

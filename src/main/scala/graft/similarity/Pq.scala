@@ -63,7 +63,7 @@ object Pq {
 
     def load(spark: org.apache.spark.sql.SparkSession,
         path: String): PqModel = {
-      val rows = spark.read.parquet(path)
+      val rows = graft.util.Tables.parquet(spark, path)
         .select(col("sub"), col("cell"),
           col("centroid").cast("array<double>"))
         .collect()

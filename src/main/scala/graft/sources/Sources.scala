@@ -4,6 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.util.Tables
 
 /** Source abstraction covering the reference's three ingest kinds —
   * REST API (JSON payload), JDBC table, and landing-zone files — behind
@@ -169,7 +170,7 @@ final case class JsonDirSource(basePath: String,
 /** Parquet table source (the engine's catalog/external-table scan — the
   * Spectrum-external-scan analog, serving/redshift.tf:9-21). */
 final case class ParquetSource(path: String) extends Source {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession): DataFrame = Tables.parquet(spark, path)
 }
 
 /** ORC table source — the other columnar lake format Spark reads

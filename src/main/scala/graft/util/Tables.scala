@@ -1,17 +1,32 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
-/** Loaders for the driver-provided testdata tables (TESTDATA.md).
+/** Loaders for the testdata tables (TESTDATA.md), and
+  * the parquet reader every other in-engine parquet read goes through.
   *
   * All parity queries read through here so the scan path is uniform:
   * plain partitioned-parquet scans that Catalyst can push filters and
   * column pruning into.
   */
 object Tables {
+  /** Exactly the schema `spark.read.parquet(paths: _*)` infers, read
+    * from the footer without a Spark job: parquet files declare their schema,
+    * so building a query needs no Spark job to find it. Fails loudly,
+    * naming the paths, when they hold no data file. */
+  def parquetSchema(spark: SparkSession, paths: String*): StructType =
+    GraftParquetShims.footerSchema(spark, paths)
+
+  /** `spark.read.parquet(paths: _*)` with the footer's schema declared
+    * (see [[parquetSchema]]): the same frame, without the
+    * schema-inference job. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(parquetSchema(spark, paths: _*)).parquet(paths: _*)
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "orders")

@@ -4,9 +4,10 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-query layer record: where one query's time and bytes went.
   * [[measure]] times building the DataFrame (eager jobs the builder
@@ -75,7 +76,10 @@ object Telemetry {
 
   /** Jobs, stages and task metrics as the listener bus delivers them.
     * Tasks count only for stages of a job seen starting here, so events
-    * of jobs begun before the measurement are ignored. */
+    * of jobs begun before the measurement are ignored. SQL executions
+    * are recorded with their call site: adaptive execution starts its
+    * query-stage jobs from a stage-materialization thread, whose own
+    * call site names a `CompletableFuture` frame, not the query. */
   private final class Recorder extends SparkListener {
     final class J(val start: SparkListenerJobStart) {
       var end = -1L
@@ -83,12 +87,19 @@ object Telemetry {
     }
     val jobs = mutable.ArrayBuffer.empty[J]
     val stageJob = mutable.Map.empty[Int, J]
+    val executionSite = mutable.Map.empty[String, String]
     var runMs, cpuNs, shufW, shufWRec, shufR, spill = 0L
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val j = new J(e)
       jobs += j
       e.stageIds.foreach(s => if (!stageJob.contains(s)) stageJob(s) = j)
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => synchronized {
+        executionSite(x.executionId.toString) = x.description
+      }
+      case _ =>
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
       jobs.find(_.start.jobId == e.jobId).foreach(_.end = e.time)
@@ -126,10 +137,10 @@ object Telemetry {
   }
 
   /** Build the frame, plan it and execute it on its OWN QueryExecution
-    * (`toRdd.count()`: no driver collect, no separate count plan), then
-    * drain the listener bus and return the record. The session must
-    * be active before the call: the listener is registered on it before
-    * `build` runs. */
+    * (`toRdd.count()` in a new SQL execution: nothing collected, no
+    * separate count plan), then drain the listener bus and return the
+    * record. The session must be active before the call: the listener
+    * is registered on it before `build` runs. */
   def measure(build: => DataFrame): Record = {
     val spark = SparkSession.active
     // earlier queries' events must not reach this query's recorder
@@ -144,7 +155,9 @@ object Telemetry {
       qe.executedPlan
       val t2 = System.nanoTime()
       val execMs = System.currentTimeMillis
-      val rows = qe.toRdd.count()
+      // inside an SQL execution, as every action runs, so that the
+      // query-stage jobs adaptive execution starts carry its call site
+      val rows = SQLExecution.withNewExecutionId(qe)(qe.toRdd.count())
       val t3 = System.nanoTime()
       val endMs = System.currentTimeMillis
       GraftSqlShims.waitForListeners(spark)
@@ -162,8 +175,11 @@ object Telemetry {
               math.min(end, endMs) - math.max(start, lastEnd))
           val gap = math.max(0L, start - lastEnd)
           lastEnd = math.max(lastEnd, end)
-          val site = Option(j.start.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
+          val props = Option(j.start.properties)
+          def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+          val site = prop("spark.sql.execution.id")
+            .flatMap(rec.executionSite.get)
+            .orElse(prop("spark.job.description"))
             .orElse(j.start.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
             .getOrElse("")
           Job(j.start.jobId, inBuild, (start - t0Ms) / 1e3,

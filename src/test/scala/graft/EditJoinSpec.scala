@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.EditJoin
+import graft.util.{Tables, TempDirs}
 
 class EditJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -443,5 +446,98 @@ class EditJoinSpec extends AnyFunSuite {
       org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(60),
       prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("the one-aggregate corpus profile equals the two-pull path on " +
+      "random corpora (property)") {
+    // the two pulls the profile replaced: min/max for the LCP
+    // over every frame, then the build side's (first frame's) distinct
+    // post-strip lengths >= k+1, kept when they fit 64
+    def twoPull(dfs: Seq[DataFrame], k: Int,
+        strip: Boolean): EditJoin.Profile = {
+      val r = dfs.map(_.select(col("__s"))).reduce(_ unionAll _)
+        .agg(min("__s"), max("__s")).head()
+      val lcp =
+        if (!strip || r.isNullAt(0)) 0
+        else r.getString(0).codePoints().toArray
+          .zip(r.getString(1).codePoints().toArray)
+          .takeWhile(t => t._1 == t._2).length
+      val stripped =
+        if (lcp == 0) dfs.head
+        else dfs.head.select(substring(col("__s"), lcp + 1, Int.MaxValue)
+          .as("__s"))
+      val ls = stripped.select(length(col("__s")).as("__l"))
+        .filter(col("__l") >= k + 1).distinct().limit(65)
+        .collect().map(_.getInt(0)).toSeq
+      EditJoin.Profile(lcp, Option.when(ls.length <= 64 && ls.nonEmpty)(ls))
+    }
+    def sorted(p: EditJoin.Profile) =
+      p.copy(buildLens = p.buildLens.map(_.sorted))
+    import org.scalacheck.Gen
+    import org.scalacheck.Prop.forAll
+    val tail = Gen.choose(0, 9).flatMap(m =>
+      Gen.listOfN(m, Gen.oneOf("a", "b", "é", "𝕏")).map(_.mkString))
+    // prefixes with supplementary-plane characters; a zero-length tail
+    // makes a string equal to the LCP
+    val prefix = Gen.oneOf("", "item-", "𝕏𝕏-", "é𝕏")
+    val small = for {
+      p <- prefix
+      n <- Gen.choose(1, 12)
+      ts <- Gen.listOfN(n, tail)
+    } yield ts.map(p + _)
+    // more than 64 distinct lengths: the profile keeps none
+    val wide = prefix.map(p => (0 until 80).map(i => p + ("b" * i)))
+    val corpus = Gen.frequency(5 -> small, 1 -> wide)
+    def frame(ss: Seq[String]) = ss.zipWithIndex
+      .map { case (s, i) => (i.toLong, s) }.toDF("__id", "__s")
+    def brute(df: DataFrame, k: Int) = df.as("a").crossJoin(df.as("b"))
+      .filter(col("a.__id") < col("b.__id"))
+      .select(col("a.__id"), col("b.__id"),
+        levenshtein(col("a.__s"), col("b.__s")).as("d"))
+      .filter(col("d") <= k)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    var sawNone, sawLcp = false
+    val prop = forAll(corpus, corpus, Gen.choose(1, 2),
+        Gen.oneOf(true, false)) { (a, b, k, strip) =>
+      val (fa, fb) = (frame(a), frame(b))
+      val self = EditJoin.profile(Seq(fa), k, strip)
+      val cross = EditJoin.profile(Seq(fa, fb), k, strip)
+      sawNone ||= self.buildLens.isEmpty && a.length >= 80
+      sawLcp ||= self.lcp > 0
+      val rows = EditJoin.selfJoin(fa, "__id", "__s", k, strip).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      sorted(self) == sorted(twoPull(Seq(fa), k, strip)) &&
+        sorted(cross) == sorted(twoPull(Seq(fa, fb), k, strip)) &&
+        rows == brute(fa, k)
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(16)
+        .withInitialSeed(org.scalacheck.rng.Seed(7L)),
+      prop)
+    assert(res.passed, res.status.toString)
+    assert(sawNone && sawLcp, "generator missed the None or LCP path")
+  }
+
+  test("constructing a selfJoin starts the jobs of one query only") {
+    val path = TempDirs.create("graft-editjoin").resolve("c").toString
+    corpus.toDF("id", "s").write.parquet(path)
+    val stored = Tables.parquet(spark, path)
+    val execIds = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        execIds.synchronized {
+          execIds += Option(e.properties)
+            .map(_.getProperty("spark.sql.execution.id")).orNull
+        }
+    }
+    GraftSqlShims.waitForListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      EditJoin.selfJoin(stored, "id", "s", maxDist = 1)
+      GraftSqlShims.waitForListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(execIds.nonEmpty, "construction pulled no corpus profile")
+    assert(!execIds.contains(null), execIds)
+    assert(execIds.distinct.size == 1, execIds)
   }
 }

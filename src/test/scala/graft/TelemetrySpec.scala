@@ -91,6 +91,19 @@ class TelemetrySpec extends AnyFunSuite {
     assert(m.rowsOut == 7)
   }
 
+  test("adaptive query-stage jobs report their SQL execution's call " +
+    "site") {
+    def shuffled(m: Int) = spark.range(0, 2000, 1, 4).toDF("id")
+      .groupBy((col("id") % m).as("k")).count()
+    val m = Telemetry.measure {
+      assert(shuffled(13).collect().length == 13)
+      shuffled(7)
+    }
+    assert(m.buildJobs >= 2 && m.jobs >= 2, m.json)
+    assert(m.jobList.forall(_.site.nonEmpty), m.json)
+    assert(!m.jobList.exists(_.site.contains("CompletableFuture")), m.json)
+  }
+
   test("the record prints as one JSON line") {
     val m = Telemetry.measure(spark.range(10).toDF("id"))
     assert(!m.json.contains("\n"))
