@@ -98,9 +98,11 @@ private object DqOps {
   }
 }
 
-/** All values in `column` are non-null. (DQDL `IsComplete`.) */
-final case class IsComplete(column: String) extends DqRule {
-  val name = s"is_complete_$column"
+/** All values in `column` are non-null. (DQDL `IsComplete`; dbt's
+  * `not_null` test is the same rule under its own name, [[NotNull]].) */
+final case class IsComplete(column: String, ruleName: String = "is_complete")
+    extends DqRule {
+  val name = s"${ruleName}_$column"
   def metrics: Seq[Column] =
     Seq(sum(when(col(column).isNull, 1L).otherwise(0L)).as(s"null_$column"))
   def passed: Column = col(s"null_$column") === 0L
@@ -538,12 +540,9 @@ final case class SchemaMatch(refName: String, op: String,
   def passed: Column = DqOps.compare(col(alias), op, lit(value))
 }
 
-/** dbt `not_null` test — alias of IsComplete with dbt naming. */
-final case class NotNull(column: String) extends DqRule {
-  val name = s"not_null_$column"
-  def metrics: Seq[Column] =
-    Seq(sum(when(col(column).isNull, 1L).otherwise(0L)).as(s"null_$column"))
-  def passed: Column = col(s"null_$column") === 0L
+/** dbt `not_null` test — [[IsComplete]] under dbt's rule name. */
+object NotNull {
+  def apply(column: String): IsComplete = IsComplete(column, "not_null")
 }
 
 final case class Ruleset(name: String, rules: Seq[DqRule])
@@ -559,9 +558,20 @@ object Dqdl {
     * aggregation per rule that needs a grouped pre-pass (Uniqueness);
     * side results are 1-row and cross-join for free.
     */
-  /** Shared metric list for one compiled pass. */
-  private def compiledMetrics(ruleset: Ruleset): Seq[Column] =
-    ruleset.rules.flatMap(_.metrics) :+ count(lit(1)).as("row_count")
+  /** Shared metric list for one compiled pass. Rules that need the same
+    * metric (a repeated rule, `IsComplete` beside `NotNull` on one
+    * column) share one column of it, or `passed`'s col(alias) would be
+    * ambiguous. */
+  private def compiledMetrics(ruleset: Ruleset): Seq[Column] = {
+    // verdicts are keyed by rule name, so two different rules under one
+    // name (two thresholds of one Uniqueness) would leave one unchecked
+    ruleset.rules.groupBy(_.name).foreach { case (n, rs) =>
+      require(rs.distinct.size == 1,
+        s"ruleset ${ruleset.name} has different rules named $n: ${rs.distinct}")
+    }
+    (ruleset.rules.flatMap(_.metrics) :+ count(lit(1)).as("row_count"))
+      .distinct
+  }
 
   /** Attach per-rule `_passed` flags + `all_passed` to an aggregated
     * frame (shared by the global and per-partition evaluators). */
@@ -597,7 +607,8 @@ object Dqdl {
         val cols = group.distinctBy(_._2).flatMap(_._4)
         group.head._3.agg(cols.head, cols.tail: _*)
       }
-    val sides = ruleset.rules.flatMap {
+    // a repeated rule's side is computed once
+    val sides = ruleset.rules.distinct.flatMap {
       case r: CrossFrameRule if r.refAggMetrics.isDefined => None
       case r: CrossFrameRule => Some(r.crossMetrics(df, resolveRef(r)))
       case r => r.sideMetrics(df)
@@ -629,7 +640,7 @@ object Dqdl {
     // partition value (the malformed increment a DQ check most needs
     // to flag) must keep its verdict row, and null != null under a
     // plain equi-join
-    val withSides = ruleset.rules.collect {
+    val withSides = ruleset.rules.distinct.collect {
       case Uniqueness(column, _) =>
         df.groupBy(col(partitionCol), col(column))
           .agg(count(lit(1)).as("__cnt"))
@@ -643,7 +654,7 @@ object Dqdl {
         .drop("__side_pc"))
     // schema-level constant sides (ColumnExists) apply to every
     // partition identically: 1-row cross join
-    val withConstSides = ruleset.rules
+    val withConstSides = ruleset.rules.distinct
       .filter(_.sideIsConstant).flatMap(_.sideMetrics(df))
       .foldLeft(withSides)(_ crossJoin _)
     attachVerdicts(withConstSides, ruleset)

@@ -2,8 +2,6 @@ package graft.examples
 
 import java.time.LocalDate
 
-import scala.concurrent.ExecutionContext.Implicits.global
-
 import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import scala.concurrent.ExecutionContext
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -115,8 +113,7 @@ object Curation {
     obs.get("appended").asInstanceOf[Long]
   }
 
-  def pipeline(spark: SparkSession, cfg: Config)(
-      implicit ec: ExecutionContext): Pipeline = {
+  def pipeline(spark: SparkSession, cfg: Config): Pipeline = {
 
     def stagePath(s: String) = s"${cfg.workDir}/$s"
     def read(s: String): DataFrame = Tables.parquet(spark, stagePath(s))

@@ -2,8 +2,6 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import scala.concurrent.ExecutionContext
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,8 +38,7 @@ object Deftunes {
     * production, fixtures offline). */
   def apiPipeline(spark: SparkSession, paths: LakePaths,
       fetchUsers: (LocalDate, LocalDate) => String,
-      fetchSessions: (LocalDate, LocalDate) => String)(
-      implicit ec: ExecutionContext): Pipeline = {
+      fetchSessions: (LocalDate, LocalDate) => String): Pipeline = {
     Lake.enableDynamicPartitionOverwrite(spark)
 
     def landingTag(w: RunWindow): String =
@@ -97,7 +94,7 @@ object Deftunes {
   /** JDBC/fixture songs extract → CSV landing → schema-enforce
     * transform → DQ gate → dbt. */
   def songsPipeline(spark: SparkSession, paths: LakePaths,
-      songsSource: Source)(implicit ec: ExecutionContext): Pipeline = {
+      songsSource: Source): Pipeline = {
     Lake.enableDynamicPartitionOverwrite(spark)
     def landingTag(w: RunWindow): String =
       w.ingestDate.toString.replace("-", "_")

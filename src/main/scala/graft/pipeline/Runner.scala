@@ -1,10 +1,11 @@
 package graft.pipeline
 
 import java.time.LocalDate
+import java.util.concurrent.ConcurrentHashMap
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
+
+import graft.util.DriverPool
 
 /** Minimal DAG runner — the engine-native replacement for the
   * reference's Airflow orchestration.
@@ -14,11 +15,13 @@ import scala.util.{Failure, Success, Try}
   * :30-34, window params {{ds}}/{{next_ds}} :63-65, retries :13-20,
   * blocking DQ gate :120-149.
   *
-  * Stages run in topological order; stages whose dependencies are all
-  * satisfied run concurrently (Scala Futures — the fan-out of the two
-  * API extracts). A failed stage (after retries) or a failed DQ gate
-  * halts everything downstream of it, mirroring Airflow's
-  * `wait_for_completion=True` quality gates.
+  * Stages are declared dependencies first and run on
+  * [[graft.util.DriverPool.gated]], one thread per stage: a stage starts
+  * as soon as its own dependencies finish, so independent stages run
+  * concurrently (the fan-out of the two API extracts). A failed stage
+  * (after retries) or a failed DQ gate halts everything downstream of
+  * it, mirroring Airflow's `wait_for_completion=True` quality gates;
+  * its siblings still run.
   */
 final case class RunWindow(start: LocalDate, endExclusive: LocalDate) {
   /** The reference's `ingest_date` = {{ next_ds }} (the window end). */
@@ -60,41 +63,34 @@ final case class PipelineResult(window: RunWindow, reports: Seq[StageReport]) {
 }
 
 final class Pipeline(val name: String, stages: Seq[Stage],
-    retries: Int = 1)(implicit ec: ExecutionContext) {
+    retries: Int = 1) {
   require(stages.map(_.name).distinct.size == stages.size,
     s"duplicate stage names in pipeline $name")
   private val byName = stages.map(s => s.name -> s).toMap
-  stages.foreach(s => s.deps.foreach(d => require(byName.contains(d),
-    s"stage ${s.name} depends on unknown stage $d")))
+  stages.zipWithIndex.foreach { case (s, i) =>
+    val earlier = stages.take(i).map(_.name).toSet
+    s.deps.foreach(d => require(earlier.contains(d),
+      s"stage ${s.name} depends on $d, which is not an earlier stage"))
+  }
 
-  /** Run one window. Independent ready stages execute concurrently. */
+  /** Run one window. A stage starts once its own dependencies finished;
+    * one below a failed stage is skipped and names that stage. */
   def run(window: RunWindow): PipelineResult = {
-    val done = scala.collection.mutable.Map.empty[String, StageReport]
-    var remaining = stages
-    while (remaining.nonEmpty) {
-      val ready = remaining.filter(_.deps.forall(d =>
-        done.get(d).exists(_.outcome == Success(StageOk))))
-      val blocked = remaining.filter(_.deps.exists(d =>
-        done.get(d).exists(r => r.outcome != Success(StageOk))))
-      if (ready.isEmpty) {
-        // everything left is blocked by a failure upstream — mark skipped
-        (remaining.toSet -- blocked.toSet).foreach { s =>
-          done(s.name) = StageReport(s.name, 0,
-            Failure(new IllegalStateException("skipped: upstream not satisfied")))
-        }
-        blocked.foreach { s =>
-          done(s.name) = StageReport(s.name, 0,
-            Failure(new IllegalStateException("skipped: upstream failed")))
-        }
-        remaining = Nil
-      } else {
-        val futures = ready.map(s => Future(runWithRetries(s, window)))
-        Await.result(Future.sequence(futures), Duration.Inf)
-          .foreach(r => done(r.stage) = r)
-        remaining = remaining.filterNot(s => done.contains(s.name))
-      }
+    val done = new ConcurrentHashMap[String, StageReport]()
+    // the stage that failed: a skipped upstream passes on its own cause
+    def failedUpstream(s: Stage): Option[String] =
+      s.deps.find(d => done.get(d).outcome != Success(StageOk))
+        .map(d => failedUpstream(byName(d)).getOrElse(d))
+    val reports = DriverPool.gated(stages.size, stages.map(_.name))(
+        byName(_).deps) { n =>
+      val s = byName(n)
+      val report = failedUpstream(s).fold(runWithRetries(s, window))(d =>
+        StageReport(n, 0, Failure(new IllegalStateException(
+          s"skipped: upstream stage $d failed"))))
+      done.put(n, report)
+      report
     }
-    PipelineResult(window, stages.map(s => done(s.name)))
+    PipelineResult(window, reports)
   }
 
   /** Sequential backfill over many windows (`max_active_runs=1`).

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.plans.BandJoinRewrite
+import graft.util.Tables
 
 /** A/B harness for [[graft.plans.BandJoinRewrite]]: the same naive
   * range-join SQL timed with the rule ON vs OFF (excluded from the
@@ -32,7 +33,7 @@ object BandJoinBench {
 
     val evts = s"target/band-bench/evts_x$m"
     val n = ScaleStress.synthesizeEvents(spark, sfDir, m, evts)
-    spark.read.parquet(evts).createOrReplaceTempView("ev")
+    Tables.parquet(spark, evts).createOrReplaceTempView("ev")
     spark.range(10).selectExpr("sum(id)").collect() // session warmup
     // keyed rewriting is opt-in (see BandJoinRewrite.KeyedConf); the
     // A/B here measures exactly that opt-in against the plain plan

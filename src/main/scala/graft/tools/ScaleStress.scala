@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.similarity.Ivf
 import graft.text.TextAnalysis
-import graft.util.Telemetry
+import graft.util.{Tables, Telemetry}
 
 /** Executes the 100 TB design claims instead of only plan-auditing
   * them: deterministically synthesizes a 10–50× corpus from the sf
@@ -54,7 +54,7 @@ object ScaleStress {
     * New ids are doc_id*m + r: collision-free and reproducible. */
   def synthesizeDocs(spark: SparkSession, sfDir: String, m: Int,
       out: String): Long = {
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = Tables.parquet(spark, s"$sfDir/documents.parquet")
     val reps = base.withColumn("r",
       explode(sequence(lit(0L), lit(m - 1L))))
     val sel = mix(col("doc_id"), col("r"), 20)
@@ -75,7 +75,7 @@ object ScaleStress {
         length(text).cast("long").as("n_chars"))
       .repartition(32)
       .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out).count()
+    Tables.parquet(spark, out).count()
   }
 
   /** Replicate `embeddings` ×m: r=0 keeps the original vector; ~30%
@@ -85,7 +85,7 @@ object ScaleStress {
     * on any cluster at any parallelism. */
   def synthesizeEmbeddings(spark: SparkSession, sfDir: String, m: Int,
       out: String): Long = {
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val base = Tables.parquet(spark, s"$sfDir/embeddings.parquet")
     val reps = base.withColumn("r",
       explode(sequence(lit(0L), lit(m - 1L))))
     val scale = when(col("r") === 0, lit(0.0))
@@ -102,7 +102,7 @@ object ScaleStress {
         jittered.as("embedding"), col("label"))
       .repartition(32)
       .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out).count()
+    Tables.parquet(spark, out).count()
   }
 
   /** Replicate `events` ×m into disjoint per-replica user-id spaces:
@@ -114,7 +114,7 @@ object ScaleStress {
     * replicas off the base corpus's exact time-bin layout. */
   def synthesizeEvents(spark: SparkSession, sfDir: String, m: Int,
       out: String): Long = {
-    val base = graft.util.Tables.events(spark, sfDir)
+    val base = Tables.events(spark, sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value")
     val reps = base.withColumn("r",
       explode(sequence(lit(0L), lit(m - 1L))))
@@ -127,7 +127,7 @@ object ScaleStress {
         col("event_type"), col("value"))
       .repartition(32)
       .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out).count()
+    Tables.parquet(spark, out).count()
   }
 
   final case class Measurement(multiplier: Int, op: String, rowsIn: Long,
@@ -274,8 +274,8 @@ object ScaleStress {
       val nEvts = if (anyEnabled(evtOps))
         synthesizeEvents(spark, sfDir, m, evtsPath) else 0L
       println(s"== x$m: $nDocs docs, $nVecs vectors, $nEvts events ==")
-      def docs = spark.read.parquet(docsPath)
-      def embs = spark.read.parquet(embPath)
+      def docs = Tables.parquet(spark, docsPath)
+      def embs = Tables.parquet(spark, embPath)
 
       if (opEnabled("exact_dedup")) rows += measureOp("exact_dedup", m, nDocs) {
         Dedup.exactDedup(
@@ -297,12 +297,12 @@ object ScaleStress {
           .write.mode("overwrite").parquet(pairsPath)
         Dedup.releaseCaches()
         val pairsSec = (System.nanoTime() - tPairs0) / 1e9
-        val nPairs = spark.read.parquet(pairsPath).count()
+        val nPairs = Tables.parquet(spark, pairsPath).count()
         rows += Measurement(m, "minhash_pairs", nDocs, nPairs, pairsSec,
           -1, -1, -1, usedHeapMB())
         if (opEnabled("connected_components"))
           rows += measureOp("connected_components", m, nPairs) {
-            Dedup.connectedComponents(spark.read.parquet(pairsPath))
+            Dedup.connectedComponents(Tables.parquet(spark, pairsPath))
           }
       }
       if (opEnabled("simhash_pairs")) rows += measureOp("simhash_pairs", m, nDocs) {
@@ -391,7 +391,7 @@ object ScaleStress {
             // hash would overflow the ANSI long sum
             pmod(xxhash64(col("id"), lit(2)), lit(1000000L)).as("m2"))
           .write.mode("overwrite").parquet(rbPath)
-        val rb = spark.read.parquet(rbPath)
+        val rb = Tables.parquet(spark, rbPath)
         graft.plans.SummaryCatalog.buildSummary(rb, Seq("k1", "k2"),
             Seq("m1", "m2"))
           .write.mode("overwrite").parquet(rsPath)
@@ -406,9 +406,9 @@ object ScaleStress {
         // OUTSIDE the timer — summary_hit measures only the rewritten
         // dashboard read
         graft.plans.SummaryCatalog.register(rb,
-          spark.read.parquet(rsPath), Seq("k1", "k2"), Seq("m1", "m2"))
+          Tables.parquet(spark, rsPath), Seq("k1", "k2"), Seq("m1", "m2"))
         rows += measureOp("summary_hit", m, nRows) {
-          dash(spark.read.parquet(rbPath))
+          dash(Tables.parquet(spark, rbPath))
         }
         graft.plans.SummaryCatalog.clear()
       }
@@ -600,8 +600,8 @@ object ScaleStress {
         corpusIdx.keys.write.mode("overwrite").parquet(keysPath)
         corpusIdx.ids.write.mode("overwrite").parquet(idsPath)
         Dedup.releaseCaches()
-        val stored = Dedup.SpanIndex(spark.read.parquet(keysPath),
-          spark.read.parquet(idsPath), windowWords = 10,
+        val stored = Dedup.SpanIndex(Tables.parquet(spark, keysPath),
+          Tables.parquet(spark, idsPath), windowWords = 10,
           hashedKeys = true)
         val nNew = docs.filter(newPred).count()
         rows += measureOp("sliding_incremental", m, nNew) {
@@ -785,7 +785,7 @@ object ScaleStress {
         corpusIdx.bands.write.mode("overwrite").parquet(idxBdPath)
         Dedup.releaseCaches()
         val stored = Dedup.MinHashIndex(
-          spark.read.parquet(idxShPath), spark.read.parquet(idxBdPath))
+          Tables.parquet(spark, idxShPath), Tables.parquet(spark, idxBdPath))
         val nNew = docs.filter(newPred).count()
         rows += measureOp("minhash_incremental", m, nNew) {
           Dedup.incrementalMinHashPairs(stored, docs.filter(newPred),
@@ -816,7 +816,7 @@ object ScaleStress {
       if (opEnabled("funnel")) rows += measureOp("funnel", m, nEvts) {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"))
-        spark.read.parquet(evtsPath)
+        Tables.parquet(spark, evtsPath)
           .select(col("user_id"), col("ts"), col("event_type"))
           .withColumn("t1",
             min(when(col("event_type") === "view", col("ts"))).over(w))
@@ -833,7 +833,7 @@ object ScaleStress {
       // cohort join, all-integer aggregation
       if (opEnabled("retention_cohorts"))
         rows += measureOp("retention_cohorts", m, nEvts) {
-          val e = spark.read.parquet(evtsPath)
+          val e = Tables.parquet(spark, evtsPath)
             .select(col("user_id"), to_date(col("ts")).as("day"))
             .distinct()
           val cohort = e.groupBy(col("user_id"))
@@ -853,7 +853,7 @@ object ScaleStress {
       if (opEnabled("scd2_historize"))
         rows += measureOp("scd2_historize", m, nEvts) {
           graft.model.Scd2.historize(
-            spark.read.parquet(evtsPath)
+            Tables.parquet(spark, evtsPath)
               .select("user_id", "ts", "event_id", "event_type"),
             keyCols = Seq("user_id"), stateCols = Seq("event_type"),
             tsCol = "ts", tieCols = Seq("event_id"))
@@ -866,7 +866,7 @@ object ScaleStress {
       // linearly in the corpus
       if (opEnabled("interval_join")) rows += measureOp("interval_join", m, nEvts) {
         graft.operators.Temporal.boundedGapSelfJoin(
-          spark.read.parquet(evtsPath), "user_id", "ts", "event_id",
+          Tables.parquet(spark, evtsPath), "user_id", "ts", "event_id",
           maxGapUs = 2L * 3600 * 1000000)
       }
       // join-cardinality pre-flight at scale: the self-join it
@@ -877,8 +877,8 @@ object ScaleStress {
       if (opEnabled("join_cardinality"))
         rows += measureOp("join_cardinality", m, nEvts) {
           graft.operators.Joins.joinCardinality(
-            spark.read.parquet(evtsPath), "user_id",
-            spark.read.parquet(evtsPath), "user_id")
+            Tables.parquet(spark, evtsPath), "user_id",
+            Tables.parquet(spark, evtsPath), "user_id")
         }
       // the sketch-preflight twin of join_cardinality: price the
       // same self-join from two O(k) key-count samples. The cost is
@@ -888,7 +888,7 @@ object ScaleStress {
       if (opEnabled("join_preflight_sketch"))
         rows += measureOp("join_preflight_sketch", m, nEvts) {
           import graft.functions.KmvFunctions._
-          def cnts = spark.read.parquet(evtsPath)
+          def cnts = Tables.parquet(spark, evtsPath)
             .groupBy(col("user_id"))
             .agg(count(lit(1)).cast("double").as("c"))
             .select(kmv_hash48(col("user_id")).as("h"), col("c"))
@@ -1068,7 +1068,7 @@ object ScaleStress {
       // only raw-table pass is the bucket aggregation
       if (opEnabled("resample")) rows += measureOp("resample", m, nEvts) {
         graft.operators.Temporal.resample(
-          spark.read.parquet(evtsPath), "user_id", "ts", "hour",
+          Tables.parquet(spark, evtsPath), "user_id", "ts", "hour",
           aggs = Seq(count(lit(1)).as("n0"),
             sum(col("value")
               .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
@@ -1095,7 +1095,7 @@ object ScaleStress {
           if (fs.exists(loc)) fs.delete(loc, true)
           val ckpt = graft.util.TempDirs.create("scale-drain-ckpt").toString
           val raw = spark.readStream
-            .schema(spark.read.parquet(evtsPath).schema)
+            .schema(Tables.parquetSchema(spark, evtsPath))
             .option("maxFilesPerTrigger", 1000).parquet(evtsPath)
           val evts = raw.withColumn("ingest_on", to_date(col("ts")))
           val t0 = System.nanoTime()
@@ -1126,7 +1126,7 @@ object ScaleStress {
         try {
           import spark.implicits._
           val raw = spark.readStream
-            .schema(spark.read.parquet(evtsPath).schema)
+            .schema(Tables.parquetSchema(spark, evtsPath))
             .option("maxFilesPerTrigger", 4).parquet(evtsPath)
           val evts = raw.select(col("event_id"), col("user_id"))
             .as[(Long, Long)]
@@ -1141,7 +1141,7 @@ object ScaleStress {
             .start()
           q.awaitTermination()
           val wall = (System.nanoTime() - t0) / 1e9
-          val rowsOut = spark.read.parquet(s"$root/out").count()
+          val rowsOut = Tables.parquet(spark, s"$root/out").count()
           rows += Measurement(m, "stream_quota", nEvts, rowsOut, wall,
             -1, -1, -1, usedHeapMB())
           // per-batch state metrics off the progress log: keys in

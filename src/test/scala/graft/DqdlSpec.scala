@@ -81,6 +81,35 @@ class DqdlSpec extends AnyFunSuite {
     assert(v.ruleResults("not_null_k") == false)
   }
 
+  test("a repeated rule, and IsComplete beside NotNull, share one metric") {
+    val df = Seq((Some(1), "a"), (Some(1), "a"), (Some(2), "b"),
+      (None, "b")).toDF("k", "p")
+    val repeated = Ruleset("t", Seq(IsComplete("k"), IsComplete("k"),
+      Uniqueness("k", 0.4), Uniqueness("k", 0.4)))
+    val v = Dqdl.evaluate(df, repeated)
+    assert(!v.passed)
+    assert(v.metrics("null_k") == 1L)
+    // 2 and NULL occur once: 2 of 4 rows
+    assert(v.metrics("uniq_ratio_k") == 0.5)
+    assert(v.ruleResults == Map("is_complete_k" -> false,
+      "uniqueness_k" -> true))
+    val byPart = Dqdl.evaluateByPartition(df, repeated, "p")
+      .select("p", "is_complete_k_passed", "uniqueness_k_passed")
+      .as[(String, Boolean, Boolean)].collect().sorted.toSeq
+    assert(byPart == Seq(("a", true, false), ("b", false, true)))
+    val paired = Ruleset("t", Seq(IsComplete("k"), NotNull("k")))
+    val withNull = Dqdl.evaluate(df, paired)
+    assert(withNull.ruleResults == Map("is_complete_k" -> false,
+      "not_null_k" -> false))
+    val complete = Dqdl.evaluate(df.filter($"k".isNotNull), paired)
+    assert(complete.passed)
+    assert(complete.ruleResults == Map("is_complete_k" -> true,
+      "not_null_k" -> true))
+    // one name, two thresholds: one verdict would go unchecked
+    intercept[IllegalArgumentException](Dqdl.evaluate(df, Ruleset("t",
+      Seq(Uniqueness("k", 0.4), Uniqueness("k", 0.6)))))
+  }
+
   test("RowCount / Completeness / MeanInRange rules") {
     val df = Seq(Some(1.0), Some(2.0), Some(3.0), None).toDF("v")
     val v = Dqdl.evaluate(df, Ruleset("t", Seq(

@@ -1,13 +1,16 @@
 package graft
 
+import java.time.LocalDate
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftSqlShims
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.pipeline.{Pipeline, RunWindow, Stage, StageOk, StageOutcome}
 import graft.util.DriverPool
 
 class DriverPoolSpec extends AnyFunSuite {
@@ -56,17 +59,26 @@ class DriverPoolSpec extends AnyFunSuite {
     assert(log.asScala.toSeq == (0 until 4).map(_ -> Thread.currentThread()))
   }
 
-  /** Runs `tasks` on the pool from a frame of its own: a job whose call
-    * site names this method was attributed to the pool's caller. */
-  private def poolCaller(threads: Int)(tasks: (() => Long)*): Seq[Long] =
-    DriverPool.all(threads)(tasks: _*)
+  /** A pipeline stage's body: one job of its own, and one in
+    * [[pooledTask]] on a pool it starts. Each job names its method in
+    * the `marker` local property. */
+  private def stageBody(sc: SparkContext, marker: String): StageOutcome = {
+    sc.setLocalProperty(marker, "stageBody")
+    sc.parallelize(1 to 10, 2).count()
+    DriverPool.all(2)(() => pooledTask(sc, marker), () => 0L)
+    StageOk
+  }
 
-  test("jobs started on pool threads carry the caller's call site, and " +
-    "the calling thread's own call site is untouched") {
-    val spark = SparkTestSession.spark
-    val sc = spark.sparkContext
+  private def pooledTask(sc: SparkContext, marker: String): Long = {
+    sc.setLocalProperty(marker, "pooledTask")
+    sc.parallelize(1 to 10, 2).count()
+  }
+
+  test("jobs started in a pipeline stage, and in a pool within it, carry " +
+    "the frame of the code that started them in their call site") {
+    val sc = SparkTestSession.spark.sparkContext
     val sites = new ConcurrentLinkedQueue[(String, String)]()
-    val marker = "graft.test.pool"
+    val marker = "graft.test.site"
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(marker)))
@@ -75,27 +87,19 @@ class DriverPoolSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty(marker, "pool")
-      val after = new ConcurrentLinkedQueue[Option[String]]()
-      val job = () => {
-        val n = spark.range(10).count()
-        after.add(Option(sc.getLocalProperty("callSite.long")))
-        n
+      val p = new Pipeline("sites", Seq(Stage("extract")(_ => StageOk),
+        Stage("transform", Seq("extract"))(_ => stageBody(sc, marker))))
+      assert(p.run(RunWindow(LocalDate.parse("2020-02-01"),
+        LocalDate.parse("2020-03-01"))).succeeded)
+      GraftSqlShims.waitForListeners(SparkTestSession.spark)
+      val byMethod = sites.asScala.toSeq.groupMap(_._1)(_._2)
+      assert(byMethod.keySet == Set("stageBody", "pooledTask"), byMethod)
+      // the long call site holds the frame of the method that started
+      // the job, the frame a recorder attributes the job by
+      byMethod.foreach { case (m, ds) => ds.foreach(d =>
+        assert(d.linesIterator.exists(
+          _.startsWith(s"graft.DriverPoolSpec.$m(")), d))
       }
-      assert(poolCaller(2)(job, job) == Seq(10L, 10L))
-      assert(after.asScala.forall(_.exists(_.contains("poolCaller"))))
-      assert(sc.getLocalProperty("callSite.long") == null,
-        "the calling thread's call site was touched")
-      GraftSqlShims.waitForListeners(spark)
-      val pooled = sites.asScala.collect { case ("pool", d) => d }.toSeq
-      assert(pooled.size >= 2)
-      pooled.foreach { d =>
-        assert(d.linesIterator.next().contains("DriverPoolSpec.poolCaller"), d)
-        assert(!d.contains("graft.util.DriverPool"), d)
-      }
-    } finally {
-      sc.setLocalProperty(marker, null)
-      sc.removeSparkListener(listener)
-    }
+    } finally sc.removeSparkListener(listener)
   }
 }

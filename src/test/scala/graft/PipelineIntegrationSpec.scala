@@ -2,8 +2,6 @@ package graft
 
 import java.time.LocalDate
 
-import scala.concurrent.ExecutionContext.Implicits.global
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

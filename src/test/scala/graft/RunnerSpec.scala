@@ -3,7 +3,6 @@ package graft
 import java.time.LocalDate
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
-import scala.concurrent.ExecutionContext.Implicits.global
 import scala.util.Success
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -71,6 +70,53 @@ class RunnerSpec extends AnyFunSuite {
     assert(!res.succeeded)
     assert(!ran.contains("dbt"), "dbt must not run after failed gate")
     assert(ran.contains("side"), "unrelated sibling must still run")
+  }
+
+  test("a dependency must name an earlier stage") {
+    def reject(stages: Stage*) =
+      intercept[IllegalArgumentException](new Pipeline("p", stages))
+        .getMessage
+    val forward = reject(Stage("a", Seq("b"))(_ => StageOk),
+      Stage("b")(_ => StageOk))
+    assert(forward.contains("stage a depends on b"), forward)
+    val self = reject(Stage("a")(_ => StageOk),
+      Stage("b", Seq("b"))(_ => StageOk))
+    assert(self.contains("stage b depends on b"), self)
+  }
+
+  test("a stage starts when its own dependencies finish, not its wave") {
+    // b holds until c starts; c needs only a. Run in waves, c would wait
+    // for b's wave to end and b would time out
+    val cStarted = new CountDownLatch(1)
+    val p = new Pipeline("per-stage", Seq(
+      Stage("a")(_ => StageOk),
+      Stage("b")(_ =>
+        if (cStarted.await(10, TimeUnit.SECONDS)) StageOk
+        else throw new IllegalStateException("c waited for b's wave")),
+      Stage("c", Seq("a"))(_ => { cStarted.countDown(); StageOk }),
+      Stage("d", Seq("b"))(_ => StageOk)), retries = 0)
+    val res = p.run(w)
+    assert(res.succeeded, res.reports)
+    assert(res.report("c").get.startMs <= res.report("b").get.endMs)
+  }
+
+  test("a stage two levels below a failed gate is skipped and names it") {
+    val ran = new ConcurrentLinkedQueue[String]()
+    def stage(n: String, deps: String*) =
+      Stage(n, deps)(_ => { ran.add(n); StageOk })
+    val p = new Pipeline("skips", Seq(stage("transform"),
+      Stage("dq", Seq("transform"))(_ => GateFailed("nulls found")),
+      stage("dbt", "dq"), stage("views", "dbt"), stage("side", "transform")))
+    val res = p.run(w)
+    assert(ran.toArray.map(_.toString).toSet == Set("transform", "side"))
+    assert(res.report("dq").get.outcome.failed.get.getMessage
+      .contains("nulls found"))
+    Seq("dbt", "views").foreach { n =>
+      val r = res.report(n).get
+      assert(r.attempts == 0 && r.startMs == 0L && r.endMs == 0L, r)
+      assert(r.outcome.failed.get.getMessage ==
+        "skipped: upstream stage dq failed", r)
+    }
   }
 
   test("retries: a flaky stage succeeds on attempt 2") {
