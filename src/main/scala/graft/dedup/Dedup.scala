@@ -321,21 +321,32 @@ object Dedup {
       .filter(size(col("__toks")) > 0)
   }
 
-  /** Sliding windows (id, __pos, __key) for pos in [0, n-k].
+  /** Sliding windows (id, __pos, __key) for pos in [0, n-k] of the
+    * documents whose id is not null.
     *
-    * The explicit `idCol IS NOT NULL` filter exists for EXCHANGE
-    * REUSE, not semantics (a null-id document is degenerate input —
-    * its windows previously influenced occurrence counts but its own
-    * tokens could never be removed, null join keys never matching):
-    * the removals join infers IsNotNull(idCol) from its struct
-    * residual and pushes it into ITS copy of this subtree, while the
-    * winner-election aggregation does not — the two
-    * `repartition(__key)` exchanges then differ by that one filter,
-    * canonical equality fails, and the O(n·k) window expansion
-    * materializes TWICE (the round-15 plan dump shows exactly this;
-    * ADVICE r15). Filtering before the repartition makes both
-    * consumers' subtrees byte-identical so the shuffle materializes
-    * once and the second consumer reads a ReusedExchange. */
+    * Leaving out null-id documents' windows is exact under the
+    * oracle's order (`ORDER BY doc_id, pos`, nulls last in DuckDB): a
+    * null-id occurrence ranks after every real one, so it is never
+    * canonical, and a real occurrence is removed only when an earlier
+    * real one exists, so its key's count reaches 2 without null-id
+    * windows. A null-id document's own tokens join no removal and
+    * survive either way. Keeping those windows would be wrong here:
+    * Spark's `min(struct)` ranks a null id FIRST, so a null-id
+    * document would win the election and a real document would lose
+    * its span; and a null-id corpus document's keys in a
+    * [[SpanIndex]] would cut batch spans that the full-corpus run
+    * keeps. DedupSpec's null-id case checks both paths against a
+    * brute-force replay of the oracle.
+    *
+    * The filter also makes exchange reuse possible: the removals
+    * join infers IsNotNull(idCol) and pushes it into ITS copy of this
+    * subtree, while the winner-election aggregation does not. Without
+    * the filter here the two `repartition(__key)` exchanges would
+    * differ by that one filter and the O(n·k) window expansion would
+    * materialize twice (the round-15 plan dump shows exactly this).
+    * With it, both consumers' subtrees are byte-identical, so the
+    * shuffle materializes once and the second consumer reads a
+    * ReusedExchange. */
   private def spanWindows(base: DataFrame, idCol: String, k: Int,
       hashKeys: Boolean): DataFrame = {
     val windowStr =
@@ -586,17 +597,12 @@ object Dedup {
     * other but NOT to the rep pair only via the other, healthy band
     * buckets — LSH's multi-band redundancy, measured near-complete on
     * mixed-family buckets in DedupSpec ("mixed families in one
-    * oversized bucket"). When the banding is too coarse for that
-    * redundancy (few bands/slots and every band collapses the mixed
-    * bucket), raise `starReps`: members then link to several
-    * hash-stripe representatives per overflowed bucket, putting a rep
-    * inside each non-negligible family (see [[bucketPairsRaw]]).
-    * Use [[bucketStats]] to see which buckets took the fallback.
+    * oversized bucket"). Use [[bucketStats]] to see which buckets took
+    * the fallback.
     */
   def minHashPairs(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, maxBucketSize: Int = 200,
-      starReps: Int = 1): DataFrame = {
+      threshold: Double = 0.5, maxBucketSize: Int = 200): DataFrame = {
     // shared first stage (one source of truth with the incremental
     // path): (id, sh) shingles pre-hashed to longs, signatures,
     // banding as ONLY (id, band, bucket) — never the shingle array
@@ -618,7 +624,7 @@ object Dedup {
     // Pairs dedupe BEFORE verification: a true near-dup collides in
     // many bands, and exact-jaccard verification is the expensive step.
     val candidates = bucketPairs(idx.bands, Seq("band", "bucket"),
-      maxBucketSize, starReps)
+      maxBucketSize)
     val shTbl = idx.shingles
     candidates
       .join(shTbl.select(col("id").as("idA"), col("sh").as("shA")), Seq("idA"))
@@ -638,9 +644,9 @@ object Dedup {
     * (k, bands) — probabilistic, tunable, never exact. */
   def minHashCandidates(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, k: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = 200, starReps: Int = 1): DataFrame = {
+      maxBucketSize: Int = 200): DataFrame = {
     val idx = buildMinHashIndex(df, idCol, textCol, shingleSize, k, bands)
-    bucketPairs(idx.bands, Seq("band", "bucket"), maxBucketSize, starReps)
+    bucketPairs(idx.bands, Seq("band", "bucket"), maxBucketSize)
   }
 
   /** A materializable MinHash-LSH corpus index: `shingles` (id, sh —
@@ -716,7 +722,7 @@ object Dedup {
     * every verification join through the doubled shingle rows. */
   def incrementalMinHashPairs(index: MinHashIndex, newDocs: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.5,
-      maxBucketSize: Int = 200, starReps: Int = 1): DataFrame = {
+      maxBucketSize: Int = 200): DataFrame = {
     val newIdx = buildMinHashIndex(newDocs, idCol, textCol,
       index.shingleSize, index.k, index.nBands)
     val newIds = newIdx.shingles.select(col("id"))
@@ -772,7 +778,7 @@ object Dedup {
     }
     val candidates = bucketPairs(
       corpusBands.unionByName(newIdx.bands),
-      Seq("band", "bucket"), maxBucketSize, starReps)
+      Seq("band", "bucket"), maxBucketSize)
     // "touches the batch" as ONE pass over the candidate pairs: two
     // broadcast left joins flag each endpoint against the (small by
     // contract — batch ≪ corpus) batch-id set and a filter keeps
@@ -999,8 +1005,8 @@ object Dedup {
     * trades three shuffles on the bucket key for one; the aggregation
     * payload is ids only (8 bytes/doc, ≤ maxSize per key). */
   private def bucketPairs(df: DataFrame, keys: Seq[String],
-      maxSize: Int, starReps: Int = 1): DataFrame =
-    bucketPairsRaw(df, keys, col("id"), maxSize, starReps)
+      maxSize: Int): DataFrame =
+    bucketPairsRaw(df, keys, col("id"), maxSize)
       .select(col("a").as("idA"), col("b").as("idB"))
       .distinct()
 
@@ -1045,28 +1051,12 @@ object Dedup {
     * simHashPairs the 16-byte/doc simhash table); embeddingNearDup
     * deliberately recomputes its narrow bucketing instead of caching
     * tables×-duplicated vectors. */
-  /** `starReps` widens the fallback for HETEROGENEOUS overflowed
-    * buckets (several distinct families trapped behind shared
-    * boilerplate, few bands to regenerate their pairs elsewhere):
-    * instead of one min-rep, each member links to `starReps`
-    * deterministic hash-stripe representatives — the minimum element
-    * within each of `starReps` xxhash64 stripes of the bucket. A
-    * pseudo-random stripe assignment puts a rep inside each
-    * non-negligible family with high probability, so members of a
-    * family the min-rep misses still meet a same-family rep and
-    * verify. Cost stays O(starReps·m) pairs and O(starReps) extra
-    * aggregation state per overflowed bucket (ONE extra narrow
-    * aggregation over overflowed-bucket members only — never a
-    * collect of the bucket). Default 1 keeps the original single-rep
-    * plan byte-identical. */
   private def bucketPairsRaw(df: DataFrame, keys: Seq[String],
-      elem: Column, maxSize: Int, starReps: Int = 1): DataFrame = {
-    require(starReps >= 1, s"starReps must be >= 1, got $starReps")
+      elem: Column, maxSize: Int): DataFrame = {
     val keyCols = keys.map(col)
     // TWO consumers read this aggregation (normalPairs and the
-    // oversized-bucket rep extraction — three with multi-rep
-    // starPairs); unpersisted, the full groupBy over every band row
-    // re-ran once per consumer — the single largest fixed cost of the
+    // oversized-bucket rep extraction); unpersisted, the full groupBy
+    // over every band row re-ran once per consumer — the single largest fixed cost of the
     // whole LSH family (measured: the capped agg is ~0.5-0.6 s per
     // pass at sf0.1 and every q_dedup_* paid it twice). LAZY persist,
     // not persistEager: both consumers live in the SAME action here
@@ -1102,45 +1092,10 @@ object Dedup {
     // already do
     val oversized = agged.filter(col("__cm.items").isNull)
       .select(keyCols :+ col("__cm.rep").as("__rep"): _*)
-    val starPairs = if (starReps == 1) {
-      df.select(keyCols :+ elem.as("__e"): _*)
-        .join(broadcast(oversized), keys)
-        .filter(col("__e") =!= col("__rep"))
-        .select(col("__rep").as("a"), col("__e").as("b"))
-    } else {
-      // multi-rep: the r=1 min-element rep is ALWAYS kept (raising
-      // starReps only adds coverage, never trades it away), plus
-      // (starReps-1) extra reps from one extra aggregation over
-      // overflowed-bucket members only — per bucket, the MIN-HASH
-      // element of each xxhash64 stripe (O(starReps) buffer, no
-      // bucket collect). Min-by-hash, not min-by-element, for the
-      // extras: element order typically correlates with load order
-      // (and hence with family), so min-element stripe reps would
-      // keep landing in the same family; hash order is pseudo-random
-      // across members, putting a rep inside each non-negligible
-      // family w.h.p. Reps then broadcast back (≤ starReps ·
-      // rows/maxSize rows) and each member pairs with every rep;
-      // least/greatest restore the a < b convention (an extra rep
-      // need not be the global min)
-      val members = df.select(keyCols :+ elem.as("__e"): _*)
-        .join(broadcast(oversized.select(keyCols: _*)), keys)
-      val extraStripes = starReps - 1
-      val h = xxhash64(col("__e"))
-      val stripeAggs = (0 until extraStripes).map(i =>
-        min(when(pmod(h, lit(extraStripes)) === i,
-          struct(h.as("__h"), col("__e").as("__v")))).as(s"__r$i"))
-      val hashReps = members.groupBy(keyCols: _*)
-        .agg(stripeAggs.head, stripeAggs.tail: _*)
-        .select(keyCols :+ explode(array(
-          (0 until extraStripes).map(i => col(s"__r$i.__v")): _*))
-          .as("__rep"): _*)
-        .filter(col("__rep").isNotNull)
-      val reps = oversized.unionByName(hashReps).distinct()
-      members.join(broadcast(reps), keys)
-        .filter(col("__e") =!= col("__rep"))
-        .select(least(col("__rep"), col("__e")).as("a"),
-          greatest(col("__rep"), col("__e")).as("b"))
-    }
+    val starPairs = df.select(keyCols :+ elem.as("__e"): _*)
+      .join(broadcast(oversized), keys)
+      .filter(col("__e") =!= col("__rep"))
+      .select(col("__rep").as("a"), col("__e").as("b"))
     normalPairs.unionByName(starPairs)
   }
 
@@ -1283,21 +1238,6 @@ object Dedup {
     * Similarity.hyperplaneBucketTables); verification is exact cosine
     * on the candidate pair; pair dedup collapses multi-table
     * collisions. */
-  /** Hyperplane count that keeps LSH buckets near `targetBucketSize`
-    * for an n-vector corpus: 2^planes buckets per table ⇒ planes =
-    * log2(n / target). Candidate-pair work per table is
-    * n·bucketSize/2, so a FIXED plane count grows quadratically with
-    * the corpus — executed proof in the scale-stress run: 4 planes
-    * (the interactive-scale default) produce ~10^8 candidate pairs at
-    * a mere 10× corpus. Size planes from corpus count, not a constant
-    * (a `count()` on the input is one cheap pass; at 100 TB the row
-    * count is already in table stats). */
-  def planesFor(n: Long, targetBucketSize: Int = 32): Int = {
-    val planes = math.ceil(math.log(math.max(n.toDouble /
-      targetBucketSize, 2.0)) / math.log(2.0)).toInt
-    math.min(math.max(planes, 4), 24)
-  }
-
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, tables: Int = 8, planesPerTable: Int = 4,
       dim: Int = 64, maxBucketSize: Int = 2000): DataFrame = {

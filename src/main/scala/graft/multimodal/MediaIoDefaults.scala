@@ -17,8 +17,8 @@ package graft.multimodal
   * [[ensure]] is called from inside each ImageIO-touching UDF body,
   * which forces this class to load (and the switch to flip) on the
   * EXECUTOR JVM too — an object-init in the UDF-defining module only
-  * covers the driver (ADVICE r15: ScaleStress's executor-side encode
-  * UDF still paid the temp-file cache in a non-local deployment). */
+  * covers the driver, so an executor-side encode or decode UDF would
+  * still pay the temp-file cache in a non-local deployment. */
 object MediaIoDefaults {
   javax.imageio.ImageIO.setUseCache(false)
 

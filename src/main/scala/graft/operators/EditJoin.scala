@@ -475,15 +475,14 @@ object EditJoin {
   def minHashSelfJoin(df: DataFrame, idCol: String, strCol: String,
       maxDist: Int, stripCommonPrefix: Boolean = true,
       shingleSize: Int = 2, k: Int = 64, bands: Int = 32,
-      maxBucketSize: Int = 200, starReps: Int = 1): DataFrame = {
+      maxBucketSize: Int = 200): DataFrame = {
     require(maxDist >= 1, "maxDist must be >= 1")
     val base0 = prep(df, idCol, strCol)
     val base =
       if (!stripCommonPrefix) base0
       else stripPrefix(base0, profile(Seq(base0), maxDist, strip = true))
     val cand = graft.dedup.Dedup.minHashCandidates(
-      base, "__id", "__s", shingleSize, k, bands, maxBucketSize,
-      starReps)
+      base, "__id", "__s", shingleSize, k, bands, maxBucketSize)
     val strs = base.select(col("__id"), col("__s"))
     cand
       .join(strs.as("ia"), col("idA") === col("ia.__id"))

@@ -438,8 +438,8 @@ object ExtensionQueries {
   // one codebook). This is the model-registry shape a deployment runs
   // (IvfModel.save/PqModel.save exist for the durable variant):
   // Bench/Verify then time SEARCH against a trained index, while
-  // training cost itself stays measured (ScaleStress ivf_train /
-  // pq_train rows, and each model's first build in the cold pass).
+  // training cost itself stays measured in each model's first build
+  // (the cold pass, or PlanDump's first run of a query).
   // Correctness is unaffected — determinism means the memoized model
   // IS the retrained model, and every oracle still replays the full
   // training chain from scratch.
@@ -2806,10 +2806,11 @@ object ExtensionQueries {
     * by CRT the pattern space is 13·11·251 ≈ 36k distinct groups, so
     * hash-duplicate cliques stay O(n/36k) instead of repeating every
     * 251 groups (a fixed-coefficient gradient made pair counts grow
-    * quadratically past ~1k images — the ScaleStress ×100 run found
-    * it). Ids in the same group of 4 share the pattern; members
-    * m = 1..3 perturb the single pixel (2m, m) by +128 (flips at most
-    * the 2 comparison bits touching that pixel). */
+    * quadratically past ~1k images, as a ×100 synthetic-image run
+    * once showed; SCALING.md, historical). Ids in the same group of 4
+    * share the pattern; members m = 1..3 perturb the single pixel
+    * (2m, m) by +128 (flips at most the 2 comparison bits touching
+    * that pixel). */
   private[graft] def syntheticGrayPng(id: Long): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(9, 8,
       java.awt.image.BufferedImage.TYPE_INT_RGB)

@@ -35,8 +35,8 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame      = load(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark scans as
-    * TIMESTAMP_NTZ (micros, nanos floored). */
+  /** `events.ts` is parquet TIMESTAMP(MICROS, isAdjustedToUTC=false),
+    * which Spark scans as TIMESTAMP_NTZ. */
   def events(spark: SparkSession, dir: String): DataFrame =
     withEventTs(load(spark, dir, "events"))
   /** `ts` cast to the session-timezone timestamp the oracles compare

@@ -177,6 +177,58 @@ class DedupSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getString(1)).toMap == full)
   }
 
+  /** The oracle SQL's ExactSubstr semantics, brute force: every
+    * document's windows count (null ids included), each duplicated
+    * window's first occurrence by (id NULLS LAST, pos) is canonical,
+    * and a later occurrence's tokens are removed from its document —
+    * never from a null-id one, whose id joins nothing. */
+  private def spanBruteForce(docs: Seq[(Option[Long], String)],
+      k: Int): Map[Option[Long], (String, Long)] = {
+    val toks = docs.map { case (id, t) => id -> t.trim.split("\\s+").toSeq }
+    val occ = for ((id, w) <- toks; pos <- 0 to w.size - k)
+      yield (w.slice(pos, pos + k).mkString(" ").toLowerCase, id, pos)
+    val covered = occ.groupBy(_._1).values.flatMap { o =>
+      o.sortBy { case (_, id, pos) => (id.isEmpty, id.getOrElse(0L), pos) }
+        .drop(1).collect { case (_, Some(id), pos) =>
+          (pos until pos + k).map(Option(id) -> _) }.flatten
+    }.toSet
+    toks.map { case (id, w) =>
+      val kept = w.indices.filterNot(i => covered((id, i))).map(w)
+      id -> (kept.mkString(" "), kept.size.toLong)
+    }.filter(_._2._2 > 0).toMap
+  }
+
+  test("a null-id document sharing a window with real ones removes " +
+      "nothing, in the full and the incremental span dedup") {
+    val span = (1 to 10).map(i => s"s$i").mkString(" ")
+    val solo = (1 to 10).map(i => s"n$i").mkString(" ")
+    val rows: Seq[(Option[Long], String)] = Seq(
+      Some(1L) -> s"$span tail",      // canonical: nulls rank last
+      Some(2L) -> s"pre $span",       // loses the span to doc 1
+      None -> s"x $span $solo y",     // null id: counted, never cut
+      Some(3L) -> s"$solo z",         // shares only with the null doc
+      Some(4L) -> "short doc")
+    def run(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      Option(r.get(0)).map(_.asInstanceOf[Long]) ->
+        (r.getString(1), r.getLong(2))).toMap
+    val want = spanBruteForce(rows, 10)
+    assert(want(Some(1L)) == ((s"$span tail", 11L)))
+    assert(want(Some(2L)) == (("pre", 1L)))
+    assert(want(Some(3L)) == ((s"$solo z", 11L)))
+    assert(want(None)._2 == 22L)
+    val docs = rows.toDF("doc_id", "text")
+    assert(run(Dedup.slidingSpanDedup(docs, "doc_id", "text",
+      windowWords = 10)) == want)
+    // the null-id document sits in the indexed corpus; the batch's
+    // doc 3 shares a window only with it and keeps every token
+    val isBatch = col("doc_id") === 3L
+    val idx = Dedup.buildSpanIndex(docs.filter(!isBatch || col("doc_id")
+      .isNull), "doc_id", "text", windowWords = 10)
+    val (cleaned, _) = Dedup.slidingSpanDedupIncremental(idx,
+      docs.filter(isBatch), "doc_id", "text")
+    assert(run(cleaned) == Map(Some(3L) -> want(Some(3L))))
+  }
+
   test("segmentDedup removes repeated lines, keeps originals in order") {
     val docs = Seq(
       (1L, "Copyright Footer\nreal content one\nMore real text"),
@@ -608,65 +660,6 @@ class DedupSpec extends AnyFunSuite {
     val recall = 1.0 - missing.size.toDouble / uncapped.size
     assert(recall >= 0.98,
       s"mixed-family recall $recall (missing ${missing.size} of ${uncapped.size})")
-  }
-
-  test("starReps=2 recovers the family the min-rep star fallback " +
-      "misses under coarse banding") {
-    // A banding too coarse for multi-band redundancy (k=8, bands=4;
-    // fixture tuned so EVERY band collapses both families into one
-    // shared 200-doc bucket — deterministic, xxhash64 is seeded):
-    // the mixed bucket overflows the cap, the r=1 star links every
-    // member to the global-min rep (family α), cross-family pairs
-    // fail exact-Jaccard verification, and family β emerges with ZERO
-    // verified pairs — 100 duplicates survive dedup untouched. With
-    // starReps=2, the two xxhash64-id stripes put a rep inside EACH
-    // family, every member meets a same-family rep, and both families
-    // collapse to one cluster each.
-    val boiler = (0 until 200).map(i => s"w0x$i").mkString(" ")
-    val alpha = (0 until 12).map(i => s"alpha0q$i").mkString(" ")
-    val beta = (0 until 12).map(i => s"beta0q$i").mkString(" ")
-    val fam = ((0 until 100).map(i => (i.toLong, s"$boiler $alpha")) ++
-      (0 until 100).map(i => (100L + i, s"$boiler $beta")))
-      .toDF("doc_id", "text")
-    def pairsAt(cap: Int, reps: Int): Set[(Long, Long)] =
-      Dedup.minHashPairs(fam, "doc_id", "text", shingleSize = 3,
-        k = 8, bands = 4, threshold = 0.95, maxBucketSize = cap,
-        starReps = reps)
-        .select("idA", "idB").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the fixture is what it claims: both families pair internally,
-    // never across, and the shared bucket really overflows the cap
-    val uncapped = pairsAt(Int.MaxValue, 1)
-    assert(uncapped.exists { case (a, b) => a < 100 && b < 100 })
-    assert(uncapped.exists { case (a, b) => a >= 100 && b >= 100 })
-    assert(!uncapped.exists { case (a, b) => a < 100 && b >= 100 })
-    val oversized = Dedup.bucketStats(fam, "doc_id", "text",
-      shingleSize = 3, k = 8, bands = 4)
-      .filter(col("bucket_size") > 120).count()
-    assert(oversized > 0, "fixture failed to produce an oversized bucket")
-
-    // r=1: the min rep (doc 0, family α) is the ONLY link source —
-    // family β has no same-family rep, so no β pair verifies
-    val r1 = pairsAt(120, 1)
-    assert(r1.nonEmpty)
-    assert(!r1.exists { case (a, b) => a >= 100 && b >= 100 },
-      s"expected the coarse banding to starve family β at starReps=1")
-
-    // r=2: a rep lands in each family; every doc of BOTH families is
-    // linked and the clustering collapses each family to one cluster
-    val r2 = pairsAt(120, 2)
-    assert(r2.exists { case (a, b) => a >= 100 && b >= 100 })
-    assert(!r2.exists { case (a, b) => a < 100 && b >= 100 },
-      "cross-family pairs must still fail verification")
-    val clusters = Dedup.connectedComponents(
-      r2.toSeq.toDF("idA", "idB"))
-    val byCluster = clusters.collect()
-      .map(r => r.getLong(1) -> r.getLong(0)).groupBy(_._1)
-      .map { case (c, ms) => c -> ms.map(_._2).toSet }
-    assert(byCluster.size == 2, s"expected 2 clusters: ${byCluster.keys}")
-    assert(byCluster.values.toSet == Set((0L until 100L).toSet,
-      (100L until 200L).toSet),
-      "each family must collapse into exactly its own cluster")
   }
 
   test("incremental minhash equals the full run's pairs touching the " +

@@ -72,12 +72,4 @@ class PackingSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.split("Exchange").length - 1 == 1, plan)
   }
-
-  test("planesFor scales hyperplane resolution with corpus size") {
-    import graft.dedup.Dedup
-    assert(Dedup.planesFor(2000) >= 6)
-    assert(Dedup.planesFor(100000) > Dedup.planesFor(2000))
-    assert(Dedup.planesFor(100) == 4)         // floor
-    assert(Dedup.planesFor(Long.MaxValue) == 24) // ceiling
-  }
 }
