@@ -3,7 +3,7 @@ package graft.dedup
 import scala.util.chaining._
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
 import graft.util.{Checkpointing, Parallelism}
@@ -238,25 +238,31 @@ object Dedup {
     * token drop; documents shorter than the window survive untouched.
     * Matching is case-insensitive; survivors keep original casing
     * with inter-word whitespace normalized (token-based, like the
-    * rest of the span family).
+    * rest of the span family). Documents sharing an id are one
+    * document to the removal (a window both hold at one position is
+    * removed from both, as the oracle's coverage by (doc_id, idx)
+    * does) and come out as one row, their kept tokens merged in
+    * (index, token) order.
     *
     * Scale shape — and why this op, unlike an exact SIMILARITY join,
     * is safe on template families: every stage is key-grouped, never
-    * pairwise. A boilerplate family of F copies makes ONE winner row
-    * with count=F and each occurrence joins that single row — work is
-    * O(occurrences), not O(F²) (there is no pair output to force
-    * quadratic cost). Stages: a codegen window explode (~k× token
-    * bytes — the one heavy shuffle), one map-side-combined count/min
-    * aggregation, one equi-join back, a coverage explode bounded by
-    * removals×k, an id-bucketed anti-join, and a per-document bounded
-    * reassembly collect.
+    * pairwise, and the O(n·k) window expansion goes through exactly
+    * one shuffle. A `row_number` window over that key exchange elects
+    * the canonical occurrence (the oracle's own rule); it sorts and
+    * spills, so a boilerplate family of F copies costs O(F) in bounded
+    * memory. The removals group by id into position lists, join the
+    * tokenized documents once, and each document's kept tokens are one
+    * per-row expression bounded by its n + r·k; nothing is ever
+    * exploded back to one row per token. The documents are scanned
+    * once: the window side and the coverage join read the same spread
+    * exchange.
     *
     * `hashKeys` is the production scale switch: window keys become
     * xxhash64 of the window string (8 bytes instead of ~7·k), cutting
-    * the window shuffle and the winner-election hash table (measured
-    * 114.6 → 32.8 s at 500k docs / 50M tokens, SCALING.md). A
-    * 64-bit collision silently merges two distinct windows
-    * (probability ~2⁻⁶⁴ per pair — the same accepted risk as
+    * the window shuffle and the election sort (measured 114.6 → 32.8 s
+    * at 500k docs / 50M tokens on the former aggregate election,
+    * SCALING.md). A 64-bit collision silently merges two distinct
+    * windows (probability ~2⁻⁶⁴ per pair — the same accepted risk as
     * [[shingleHashes]]); keep `hashKeys = false` when the output must
     * be bit-reproducible against a plain-SQL replay (the oracle
     * query's mode).
@@ -272,37 +278,20 @@ object Dedup {
     // a corpus that arrived in fewer splits than cores (one small file)
     // would window and reassemble on one task
     val base = Parallelism.spread(spanTokenize(df, idCol, textCol), idCol)
-    // ONE explicit exchange on the window key, shared by BOTH
-    // consumers (winner election and the removals join): the two
-    // subtrees below reference the identical repartition node, so
-    // Spark's exchange reuse materializes the O(n·k) window-string
-    // expansion exactly once in shuffle files and both sides read it
-    // back — previously each consumer re-built every window string
-    // (the dominant cost of this operator) and shuffled it again.
-    // Shuffle files spill to local disk by design, so this stays safe
-    // at corpus scale where caching the expansion would not (SCALING:
-    // columnar-caching the token frames tripled the ×100 wall). The
-    // downstream groupBy and the equi-join both key on __key, so
-    // neither adds another exchange. The partition count is explicit
-    // (the session's shuffle partitions, at least one per core): AQE
-    // sizes partitions by bytes and would coalesce a few MB of windows
-    // into one task, while the cost here is per-row string work.
+    // ONE explicit exchange on the window key, the only shuffle of the
+    // O(n·k) window expansion. Shuffle files spill to local disk by
+    // design, so this stays safe at corpus scale where caching the
+    // expansion would not (SCALING: columnar-caching the token frames
+    // tripled the ×100 wall). The election window keys on __key, so it
+    // adds no exchange. The partition count is explicit (the session's
+    // shuffle partitions, at least one per core): AQE sizes partitions
+    // by bytes and would coalesce a few MB of windows into one task,
+    // while the cost here is per-row string work.
     val windows = spanWindows(base, idCol, k, hashKeys)
       .repartition(math.max(spark.sparkContext.defaultParallelism,
         spark.conf.get("spark.sql.shuffle.partitions").toInt),
         col("__key"))
-    // winner election: ONE aggregation per distinct window key
-    val winners = windows
-      .groupBy(col("__key").as("__win_key"))
-      .agg(min(struct(col(idCol), col("__pos"))).as("__win"),
-        count(lit(1)).as("__occ"))
-      .filter(col("__occ") >= 2)
-    // non-canonical occurrences of duplicated windows → removals
-    val removals = windows
-      .join(winners, col("__key") === col("__win_key") &&
-        struct(col(idCol), col("__pos")) =!= col("__win"))
-      .select(col(idCol), col("__pos"))
-    spanRemoveCovered(base, removals, idCol, k)
+    spanRemoveCovered(base, laterOccurrences(windows, idCol), idCol, k)
   }
 
   /** Tokenized documents (id, __toks). Deliberately NOT persisted:
@@ -328,59 +317,77 @@ object Dedup {
     * oracle's order (`ORDER BY doc_id, pos`, nulls last in DuckDB): a
     * null-id occurrence ranks after every real one, so it is never
     * canonical, and a real occurrence is removed only when an earlier
-    * real one exists, so its key's count reaches 2 without null-id
-    * windows. A null-id document's own tokens join no removal and
-    * survive either way. Keeping those windows would be wrong here:
-    * Spark's `min(struct)` ranks a null id FIRST, so a null-id
-    * document would win the election and a real document would lose
-    * its span; and a null-id corpus document's keys in a
-    * [[SpanIndex]] would cut batch spans that the full-corpus run
-    * keeps. DedupSpec's null-id case checks both paths against a
-    * brute-force replay of the oracle.
+    * real one exists. A null-id document's own tokens join no removal
+    * and survive either way. Keeping those windows would be wrong
+    * here: Spark orders a null id FIRST, so a null-id document would
+    * win the election and a real document would lose its span; and a
+    * null-id corpus document's keys in a [[SpanIndex]] would cut batch
+    * spans that the full-corpus run keeps. DedupSpec's null-id case
+    * checks both paths against a brute-force replay of the oracle.
     *
-    * The filter also makes exchange reuse possible: the removals
-    * join infers IsNotNull(idCol) and pushes it into ITS copy of this
-    * subtree, while the winner-election aggregation does not. Without
-    * the filter here the two `repartition(__key)` exchanges would
-    * differ by that one filter and the O(n·k) window expansion would
-    * materialize twice (the round-15 plan dump shows exactly this).
-    * With it, both consumers' subtrees are byte-identical, so the
-    * shuffle materializes once and the second consumer reads a
-    * ReusedExchange. */
+    * The rule lives in the generator (an empty position list), not in
+    * a `Filter`: a filter would be pushed below the spread exchange
+    * into this consumer's copy of the documents subtree only, the two
+    * consumers of `base` (these windows and the coverage join) would
+    * differ, and the documents would be scanned and spread twice. With
+    * no filter both read one exchange, the second as a ReusedExchange. */
   private def spanWindows(base: DataFrame, idCol: String, k: Int,
       hashKeys: Boolean): DataFrame = {
+    val n = size(col("__toks"))
     val windowStr =
       lower(array_join(slice(col("__toks"), col("__pos") + 1, lit(k)),
         " "))
     base
-      .filter(size(col("__toks")) >= k && col(idCol).isNotNull)
       .select(col(idCol),
-        explode(sequence(lit(0), size(col("__toks")) - k)).as("__pos"),
+        explode(when(n >= k && col(idCol).isNotNull,
+            sequence(lit(0), n - k))
+          .otherwise(array().cast("array<int>"))).as("__pos"),
         col("__toks"))
       .select(col(idCol), col("__pos"),
         (if (hashKeys) xxhash64(windowStr) else windowStr).as("__key"))
   }
 
-  /** Shared tail: drop every token index covered by a removed window,
-    * reassemble survivors in order → (idCol, clean_text,
-    * kept_tokens). */
+  /** Every occurrence of a window key but its first by (id, pos) — the
+    * oracle's `row_number() OVER (PARTITION BY key ORDER BY doc_id,
+    * pos) > 1`. Over windows already partitioned by `__key` it adds no
+    * exchange. → (idCol, __pos) */
+  private def laterOccurrences(windows: DataFrame,
+      idCol: String): DataFrame =
+    windows
+      .withColumn("__rn", row_number().over(Window
+        .partitionBy(col("__key")).orderBy(col(idCol), col("__pos"))))
+      .filter(col("__rn") > 1)
+      .select(col(idCol), col("__pos"))
+
+  /** Shared tail: the removed window positions grouped per id, joined
+    * to the tokenized documents once; each document keeps
+    * [0, n) minus the k tokens of every removal of its id (one per-row
+    * expression, bounded by n + r·k), and the documents of one id merge
+    * into one row in (index, token) order → (idCol, clean_text,
+    * kept_tokens). Both inputs are partitioned by id, so neither the
+    * join nor the merge adds an exchange when `base` is spread. */
   private def spanRemoveCovered(base: DataFrame, removals: DataFrame,
       idCol: String, k: Int): DataFrame = {
-    val tokens = base.select(col(idCol),
-      posexplode(col("__toks")).as(Seq("__idx", "__tok")))
-    val covered = removals
-      .select(col(idCol),
-        explode(sequence(col("__pos"), col("__pos") + (k - 1)))
-          .as("__idx"))
-      .distinct()
-    tokens
-      .join(covered, Seq(idCol, "__idx"), "left_anti")
+    val cuts = removals.groupBy(col(idCol))
+      .agg(collect_list(col("__pos")).as("__cut"))
+    val all = sequence(lit(0), size(col("__toks")) - 1)
+    val keptIdx = when(col("__cut").isNull, all)
+      .otherwise(array_except(all,
+        flatten(transform(col("__cut"), p => sequence(p, p + (k - 1))))))
+    val parts = col("__parts")
+    base.join(cuts, Seq(idCol), "left")
+      .select(col(idCol), transform(keptIdx, i => struct(i.as("__idx"),
+        element_at(col("__toks"), i + 1).as("__tok"))).as("__kept"))
+      .filter(size(col("__kept")) > 0)
       .groupBy(col(idCol))
-      .agg(
-        array_join(transform(
-          array_sort(collect_list(struct(col("__idx"), col("__tok")))),
-          x => x.getField("__tok")), " ").as("clean_text"),
-        count(lit(1)).as("kept_tokens"))
+      .agg(collect_list(col("__kept")).as("__parts"))
+      // one document per id, the usual case, is already in index order
+      .select(col(idCol), when(size(parts) === 1, element_at(parts, 1))
+        .otherwise(array_sort(flatten(parts))).as("__kept"))
+      .select(col(idCol),
+        array_join(transform(col("__kept"), _.getField("__tok")), " ")
+          .as("clean_text"),
+        size(col("__kept")).cast("long").as("kept_tokens"))
   }
 
   /** A materializable sliding-window corpus index for
@@ -436,9 +443,10 @@ object Dedup {
     * contributes ONE column-pruned scan of its key column, probed by
     * the broadcast batch keys (batch ≪ corpus — the operator's
     * premise, like incrementalMinHashPairs), and the matched keys
-    * (≤ batch keys) broadcast back. Ids already ingested are a loud
-    * error — re-ingest would mark every batch window as seen and
-    * hollow the documents out. */
+    * (≤ batch keys) broadcast back. Both kinds of removal feed the
+    * same coverage tail as the full-corpus op. Ids already ingested
+    * are a loud error — re-ingest would mark every batch window as
+    * seen and hollow the documents out. */
   def slidingSpanDedupIncremental(index: SpanIndex, batch: DataFrame,
       idCol: String, textCol: String): (DataFrame, SpanIndex) = {
     val k = index.windowWords
@@ -460,11 +468,10 @@ object Dedup {
         .headOption.map(_.get(0)).getOrElse("")}) — dedupe re-ingests " +
         "before calling, or rebuild the index")
     // one explicit exchange on the window key shared by EVERY consumer
-    // of the batch expansion (key-distinct, the two hit-key probes,
-    // winner election, the internal-removals join — five references):
-    // exchange reuse materializes the O(batch·k) window strings once
-    // in shuffle files instead of rebuilding them per consumer (same
-    // restructure as slidingSpanDedup; see the comment there)
+    // of the batch expansion (key-distinct, the two hit-key probes and
+    // the election): exchange reuse materializes the O(batch·k) window
+    // strings once in shuffle files instead of rebuilding them per
+    // consumer
     val windows = spanWindows(base, idCol, k, index.hashedKeys)
       .repartition(col("__key"))
     val batchKeys = windows.select(col("__key")).distinct()
@@ -476,17 +483,8 @@ object Dedup {
       .join(broadcast(hitKeys), Seq("__key"), "left_semi")
       .select(col(idCol), col("__pos"))
     // keys new to the corpus: batch-internal keep-first
-    val fresh = windows
-      .join(broadcast(hitKeys), Seq("__key"), "left_anti")
-    val winners = fresh
-      .groupBy(col("__key").as("__win_key"))
-      .agg(min(struct(col(idCol), col("__pos"))).as("__win"),
-        count(lit(1)).as("__occ"))
-      .filter(col("__occ") >= 2)
-    val rmInternal = fresh
-      .join(winners, col("__key") === col("__win_key") &&
-        struct(col(idCol), col("__pos")) =!= col("__win"))
-      .select(col(idCol), col("__pos"))
+    val rmInternal = laterOccurrences(windows
+      .join(broadcast(hitKeys), Seq("__key"), "left_anti"), idCol)
     val cleaned = spanRemoveCovered(base,
       rmIndexed.unionByName(rmInternal), idCol, k)
     val next = SpanIndex(

@@ -2,6 +2,7 @@ package graft.util
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
@@ -16,6 +17,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * for the jobs, stages, tasks and task metrics. Shuffle, spill, CPU and
   * task counts cover the whole measured window (build and execution);
   * `jobs` counts execution jobs only, `buildJobs` the ones before it.
+  * `codegenCompiles` is JVM-wide: every class Spark's code generator
+  * compiled during the call, this query's or another thread's.
   */
 object Telemetry {
 
@@ -34,6 +37,9 @@ object Telemetry {
       shuffleWriteBytes: Long, shuffleWriteRecords: Long,
       shuffleReadBytes: Long, spillBytes: Long,
       rowsOut: Long, reusedExchanges: Int,
+      /** generated classes compiled in the JVM over the measurement
+        * (cache misses of Spark's code generator, any thread's) */
+      codegenCompiles: Long,
       jobList: Seq[Job],
       /** the executed (final, when adaptive) plan, formatted */
       plan: String) {
@@ -59,6 +65,7 @@ object Telemetry {
         "shuffle_read_bytes" -> shuffleReadBytes,
         "spill_bytes" -> spillBytes, "rows_out" -> rowsOut,
         "reused_exchanges" -> reusedExchanges,
+        "codegen_compiles" -> codegenCompiles,
         "job_list" -> jobList.map(j => obj("id" -> j.id,
           "build" -> j.build, "start_s" -> num(j.startS),
           "dur_s" -> num(j.durS), "gap_s" -> num(j.gapS),
@@ -147,6 +154,7 @@ object Telemetry {
     GraftSqlShims.waitForListeners(spark)
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
       val t0Ms = System.currentTimeMillis
       val t0 = System.nanoTime()
@@ -161,6 +169,8 @@ object Telemetry {
       val t3 = System.nanoTime()
       val endMs = System.currentTimeMillis
       GraftSqlShims.waitForListeners(spark)
+      val compiles =
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       rec.synchronized {
         // walk the jobs in start order: the gap before each job, and the
         // union of the execution jobs' intervals within execution
@@ -197,6 +207,7 @@ object Telemetry {
           shuffleWriteBytes = rec.shufW, shuffleWriteRecords = rec.shufWRec,
           shuffleReadBytes = rec.shufR, spillBytes = rec.spill,
           rowsOut = rows, reusedExchanges = reusedExchanges(qe.executedPlan),
+          codegenCompiles = compiles,
           jobList = jobList, plan = qe.explainString(FormattedMode))
       }
     } finally spark.sparkContext.removeSparkListener(rec)

@@ -177,25 +177,125 @@ class DedupSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getString(1)).toMap == full)
   }
 
-  /** The oracle SQL's ExactSubstr semantics, brute force: every
-    * document's windows count (null ids included), each duplicated
-    * window's first occurrence by (id NULLS LAST, pos) is canonical,
-    * and a later occurrence's tokens are removed from its document —
-    * never from a null-id one, whose id joins nothing. */
+  /** The oracle SQL's ExactSubstr semantics, brute force: texts are
+    * trimmed of spaces (`trim`), empty ones dropped, the rest split on
+    * `\\s+` keeping empty tokens; every document's windows count (null
+    * ids included), each duplicated window's first occurrence by
+    * (id NULLS LAST, pos) is canonical, and a later occurrence's
+    * tokens are removed from every document of its id — never from a
+    * null-id one, whose id joins nothing. The documents of one id merge
+    * into one row in (index, token) order. */
   private def spanBruteForce(docs: Seq[(Option[Long], String)],
       k: Int): Map[Option[Long], (String, Long)] = {
-    val toks = docs.map { case (id, t) => id -> t.trim.split("\\s+").toSeq }
-    val occ = for ((id, w) <- toks; pos <- 0 to w.size - k)
-      yield (w.slice(pos, pos + k).mkString(" ").toLowerCase, id, pos)
+    val toks = docs.flatMap { case (id, t) =>
+      val s = t.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+      if (s.isEmpty) None else Some(id -> s.split("\\s+", -1).toSeq)
+    }
+    val occ = for ((id, w) <- toks; pos <- 0 to w.size - k) yield
+      (w.slice(pos, pos + k).mkString(" ").toLowerCase(java.util.Locale.ROOT),
+        id, pos)
     val covered = occ.groupBy(_._1).values.flatMap { o =>
       o.sortBy { case (_, id, pos) => (id.isEmpty, id.getOrElse(0L), pos) }
         .drop(1).collect { case (_, Some(id), pos) =>
           (pos until pos + k).map(Option(id) -> _) }.flatten
     }.toSet
-    toks.map { case (id, w) =>
-      val kept = w.indices.filterNot(i => covered((id, i))).map(w)
+    toks.groupBy(_._1).map { case (id, ds) =>
+      val kept = ds.flatMap { case (_, w) =>
+        w.indices.filterNot(i => covered((id, i))).map(i => i -> w(i))
+      }.sorted.map(_._2)
       id -> (kept.mkString(" "), kept.size.toLong)
-    }.filter(_._2._2 > 0).toMap
+    }.filter(_._2._2 > 0)
+  }
+
+  private def spanRows(df: org.apache.spark.sql.DataFrame) = {
+    val rows = df.collect().map(r =>
+      Option(r.get(0)).map(_.asInstanceOf[Long]) ->
+        (r.getString(1), r.getLong(2)))
+    assert(rows.map(_._1).distinct.length == rows.length,
+      s"more than one row for an id: ${rows.toSeq}")
+    rows.toMap
+  }
+
+  /** A seeded corpus with shifted repeats, documents shorter than and
+    * exactly as long as the window, whitespace-only texts, non-BMP
+    * characters (a Deseret capital and its lowercase among them), two
+    * documents under one id and a null id. Ids are 1..n shuffled, so
+    * id order is not row order. */
+  private def spanCorpus(seed: Int, k: Int): Seq[(Option[Long], String)] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Vector("a", "b", "c", "B", "é", "\uD801\uDC00",
+      "\uD801\uDC28", "\uD83D\uDE00", "x\uD835\uDD18y")
+    def words(n: Int) = Vector.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    def text(w: Seq[String]) = (if (rnd.nextInt(4) == 0) "  " else "") +
+      w.map(_ + (rnd.nextInt(6) match {
+        case 0 => "  "
+        case 1 => "\t"
+        case _ => " "
+      })).mkString.dropRight(1)
+    val bodies = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    (0 until 8).foreach(_ => bodies += words(rnd.nextInt(12)))
+    // shifted repeats: a span of an earlier body at another offset
+    (0 until 4).foreach { _ =>
+      val src = bodies(rnd.nextInt(bodies.size))
+      val from = rnd.nextInt(src.size + 1)
+      bodies += words(rnd.nextInt(3)) ++
+        src.slice(from, from + k + rnd.nextInt(3)) ++ words(rnd.nextInt(3))
+    }
+    bodies += words(k - 1) // shorter than the window
+    bodies += bodies.find(_.size > k).getOrElse(words(k + 2)).take(k)
+    val ids = rnd.shuffle((1L to bodies.size.toLong).toVector)
+    val docs = bodies.zip(ids).map { case (b, id) => Option(id) -> text(b) }
+    val (dupId, dupText) = docs(rnd.nextInt(docs.size))
+    docs.toSeq ++ Seq(
+      Option(bodies.size + 1L) -> "   ",
+      Option(bodies.size + 2L) -> "",
+      Option(bodies.size + 3L) -> " \t ",
+      dupId -> (if (rnd.nextBoolean()) dupText
+                else dupText.split(" ").reverse.mkString(" ")),
+      None -> text(bodies(rnd.nextInt(bodies.size)) ++ words(2)))
+  }
+
+  test("slidingSpanDedup, hashed and not, and the incremental op match " +
+      "a brute-force replay of the oracle on 20 seeded corpora") {
+    for (seed <- 1 to 20) {
+      val k = 2 + seed % 3
+      val rows = spanCorpus(seed, k)
+      val want = spanBruteForce(rows, k)
+      val docs = rows.toDF("doc_id", "text")
+      for (hashKeys <- Seq(false, true))
+        assert(spanRows(Dedup.slidingSpanDedup(docs, "doc_id", "text",
+          windowWords = k, hashKeys = hashKeys)) == want,
+          s"seed $seed hashKeys=$hashKeys")
+      // batch ids sort after the corpus's; the null id stays in the corpus
+      val cut = rows.flatMap(_._1).max / 2 + 1
+      val isBatch = col("doc_id") >= cut
+      val idx = Dedup.buildSpanIndex(docs.filter(!isBatch ||
+        col("doc_id").isNull), "doc_id", "text", windowWords = k)
+      val (cleaned, _) = Dedup.slidingSpanDedupIncremental(idx,
+        docs.filter(isBatch), "doc_id", "text")
+      assert(spanRows(cleaned) ==
+        want.filter(_._1.exists(_ >= cut)), s"seed $seed incremental")
+    }
+  }
+
+  test("two documents under one id lose a window they share at one " +
+      "position and merge into one row") {
+    // "p q r" at pos 0 and "q r s" at pos 1 occur twice under id 1:
+    // the second occurrence of each cuts tokens 0..3 of BOTH documents
+    // (coverage is by (id, index)); doc 2 loses its later "p q r"
+    val rows: Seq[(Option[Long], String)] = Seq(
+      Some(1L) -> "p q r s t", Some(1L) -> "p q r s u",
+      Some(2L) -> "z p q r")
+    val want = Map(Some(1L) -> (("t u", 2L)), Some(2L) -> (("z", 1L)))
+    assert(spanBruteForce(rows, 3) == want)
+    val docs = rows.toDF("doc_id", "text")
+    assert(spanRows(Dedup.slidingSpanDedup(docs, "doc_id", "text",
+      windowWords = 3)) == want)
+    val idx = Dedup.buildSpanIndex(docs.filter(col("doc_id") === 2L),
+      "doc_id", "text", windowWords = 3)
+    assert(spanRows(Dedup.slidingSpanDedupIncremental(idx,
+      docs.filter(col("doc_id") === 1L), "doc_id", "text")._1) ==
+      Map(Some(1L) -> want(Some(1L))))
   }
 
   test("a null-id document sharing a window with real ones removes " +
@@ -208,16 +308,13 @@ class DedupSpec extends AnyFunSuite {
       None -> s"x $span $solo y",     // null id: counted, never cut
       Some(3L) -> s"$solo z",         // shares only with the null doc
       Some(4L) -> "short doc")
-    def run(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-      Option(r.get(0)).map(_.asInstanceOf[Long]) ->
-        (r.getString(1), r.getLong(2))).toMap
     val want = spanBruteForce(rows, 10)
     assert(want(Some(1L)) == ((s"$span tail", 11L)))
     assert(want(Some(2L)) == (("pre", 1L)))
     assert(want(Some(3L)) == ((s"$solo z", 11L)))
     assert(want(None)._2 == 22L)
     val docs = rows.toDF("doc_id", "text")
-    assert(run(Dedup.slidingSpanDedup(docs, "doc_id", "text",
+    assert(spanRows(Dedup.slidingSpanDedup(docs, "doc_id", "text",
       windowWords = 10)) == want)
     // the null-id document sits in the indexed corpus; the batch's
     // doc 3 shares a window only with it and keeps every token
@@ -226,7 +323,7 @@ class DedupSpec extends AnyFunSuite {
       .isNull), "doc_id", "text", windowWords = 10)
     val (cleaned, _) = Dedup.slidingSpanDedupIncremental(idx,
       docs.filter(isBatch), "doc_id", "text")
-    assert(run(cleaned) == Map(Some(3L) -> want(Some(3L))))
+    assert(spanRows(cleaned) == Map(Some(3L) -> want(Some(3L))))
   }
 
   test("segmentDedup removes repeated lines, keeps originals in order") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -876,7 +876,8 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("sliding-span dedup: the window exchange is pinned to a partition " +
-      "per core, never coalesced, and read twice through a ReusedExchange") {
+      "per core and never coalesced; windows are generated once from one " +
+      "documents scan") {
     val nodes = finalNodes("q_dedup_sliding_spans")
     def onKey(e: ShuffleExchangeExec) =
       e.outputPartitioning.toString.contains("__key")
@@ -885,12 +886,6 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(keyed.head.shuffleOrigin == REPARTITION_BY_NUM)
     assert(keyed.head.outputPartitioning.numPartitions >=
       spark.sparkContext.defaultParallelism)
-    assert(nodes.exists {
-      case r: ReusedExchangeExec =>
-        r.child.isInstanceOf[ShuffleExchangeExec] &&
-          onKey(r.child.asInstanceOf[ShuffleExchangeExec])
-      case _ => false
-    }, s"no ReusedExchange of the __key exchange:\n${nodes.head.treeString}")
     val coalescedOverKey = nodes.exists {
       case r: AQEShuffleReadExec => r.hasCoalescedPartition &&
         r.child.collectFirst { case s: QueryStageExec => s.plan }.exists {
@@ -902,6 +897,19 @@ class PlanAuditSpec extends AnyFunSuite {
       case _ => false
     }
     assert(!coalescedOverKey, nodes.head.treeString)
+    // the window explode carries the short- and null-id rule itself, so
+    // no filter splits the documents subtree: the window side and the
+    // coverage join read one scan (the second through a ReusedExchange)
+    val windowGen = nodes.collect {
+      case g: GenerateExec if g.generatorOutput.exists(_.name == "__pos") => g
+    }
+    assert(windowGen.size == 1, nodes.head.treeString)
+    val docScans = nodes.collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.mkString
+            .contains("documents.parquet") => f
+    }
+    assert(docScans.size == 1, nodes.head.treeString)
   }
 
   test("text quality reads the single-split documents scan through the " +

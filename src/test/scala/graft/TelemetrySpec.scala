@@ -104,13 +104,26 @@ class TelemetrySpec extends AnyFunSuite {
     assert(!m.jobList.exists(_.site.contains("CompletableFuture")), m.json)
   }
 
+  test("a query's first run compiles generated classes and an " +
+      "identical second run compiles none") {
+    // a literal no other test uses, so the first run's code is new
+    val salt = 1000003L + scala.util.Random.nextInt(1 << 30)
+    def query = spark.range(0, 1000, 1, 2).toDF("id")
+      .select((col("id") * lit(salt) % 97).as("m"))
+      .groupBy(col("m")).agg(sum(col("m")).as("s"))
+    val first = Telemetry.measure(query)
+    assert(first.codegenCompiles > 0, first.json)
+    val second = Telemetry.measure(query)
+    assert(second.codegenCompiles == 0, second.json)
+  }
+
   test("the record prints as one JSON line") {
     val m = Telemetry.measure(spark.range(10).toDF("id"))
     assert(!m.json.contains("\n"))
     Seq("build_s", "plan_s", "exec_s", "gap_s", "build_jobs", "jobs",
       "stages", "tasks", "task_run_s", "task_cpu_s", "shuffle_write_bytes",
       "shuffle_write_records", "shuffle_read_bytes", "spill_bytes",
-      "rows_out", "reused_exchanges", "job_list")
+      "rows_out", "reused_exchanges", "codegen_compiles", "job_list")
       .foreach(k => assert(m.json.contains(s""""$k":"""), k))
     assert(m.json.contains(""""rows_out":10,"""))
   }

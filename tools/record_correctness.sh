@@ -26,9 +26,9 @@ summary=$(tail -1 /tmp/compare_cl.log)
   echo
   echo "Result: **$summary** (verify-side dump errors: $fails)"
   echo
-  fail_lines=$(grep '^FAIL' /tmp/compare_cl.log || true)
+  fail_lines=$(grep -E '^(FAIL|REFUSED)' /tmp/compare_cl.log || true)
   if [ -n "$fail_lines" ]; then
-    echo "Failures:"
+    echo "Failures and oracle refusals:"
     echo '```'
     echo "$fail_lines"
     echo '```'
